@@ -1420,17 +1420,24 @@ def semantic_dedup_keep(sem: DataFrame, df: DataFrame, *, id_col: str,
     )
 
 
+# Set only by `semantic_dedup_prepare_reps`: a reps table carrying this
+# column has its rep norms precomputed. A dedicated name, so an
+# unrelated column of the caller's (e.g. a row-number `_rn`) is never
+# mistaken for a norm.
+PREPARED_REP_NORM = "_semdedup_rep_norm"
+
+
 def semantic_dedup_prepare_reps(reps: DataFrame) -> DataFrame:
     """Pre-compute the static-side norms of a frozen reps table for
     repeated `semantic_dedup_apply` calls (the streaming per-trigger
-    case): (cell, rep_id, rep_vec, _rn) where `_rn` is exactly the
-    `_norm` fold `semantic_dedup_apply` would otherwise re-derive per
-    call — float-identical cosines, one fewer expression over the
-    static side in every micro-batch plan. Persist/cache the result
-    for the stream's lifetime (semantic_dedup_stream does)."""
+    case): (cell, rep_id, rep_vec, PREPARED_REP_NORM) where the norm is
+    exactly the `_norm` fold `semantic_dedup_apply` would otherwise
+    re-derive per call — float-identical cosines, one fewer expression
+    over the static side in every micro-batch plan. Persist/cache the
+    result for the stream's lifetime (semantic_dedup_stream does)."""
     return reps.select(
         "cell", "rep_id", "rep_vec",
-        _norm(F.col("rep_vec")).alias("_rn"),
+        _norm(F.col("rep_vec")).alias(PREPARED_REP_NORM),
     )
 
 
@@ -1516,15 +1523,15 @@ def semantic_dedup_apply(
     # MANY batches against one frozen reps table (the streaming
     # apply) can pre-compute the rep norms once with
     # `semantic_dedup_prepare_reps` and persist the result — a reps
-    # table already carrying `_rn` is used as-is, so the per-trigger
-    # plan re-derives nothing on the static side. `_rn` here is the
-    # same `_norm` fold over the same doubles, so cosines are
-    # float-identical either way.
+    # table carrying its PREPARED_REP_NORM column is used as-is, so the
+    # per-trigger plan re-derives nothing on the static side. That
+    # column is the same `_norm` fold over the same doubles, so cosines
+    # are float-identical either way.
     r = reps.select(
         F.col("cell"), F.col("rep_id").alias("_rid"),
         F.col("rep_vec").alias("_rv"),
-        (F.col("_rn") if "_rn" in reps.columns
-         else _norm(F.col("rep_vec")).alias("_rn")),
+        (F.col(PREPARED_REP_NORM) if PREPARED_REP_NORM in reps.columns
+         else _norm(F.col("rep_vec"))).alias("_rn"),
     )
     sim = F.round(
         _safe_div(_dot(F.col(vec_col), F.col("_rv")),

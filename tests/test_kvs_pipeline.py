@@ -12,6 +12,8 @@ from awskinesisconsumer_spark.streaming.kvs_pipeline import (
     kvs_frames_with_tags,
 )
 
+TAG_NAME, TAG_STRING, SIMPLE_BLOCK = 0x45A3, 0x4487, 0xA3
+
 
 def _fragment(frag_no: int, n_frames: int) -> bytes:
     tag_values = {
@@ -198,3 +200,113 @@ def test_demux_explode_laced_frames(spark):
     # crash the batch — one row, null metadata AND null lace columns
     assert len(by_chunk[5]) == 1
     assert by_chunk[5][0].track is None and by_chunk[5][0].lace_payload is None
+
+
+def _composed(chunks):
+    """The relational composition the fused pass replaces: tokenize,
+    pivot the tags, demux the SimpleBlocks, left-join on chunk_id."""
+    from pyspark.sql import functions as F
+
+    from awskinesisconsumer_spark.sources.ebml import parse_ebml_chunks
+    from awskinesisconsumer_spark.streaming.kvs_pipeline import (
+        INTERESTING, demux_blocks, pivot_tags,
+    )
+
+    elements = parse_ebml_chunks(chunks, interesting_names=INTERESTING)
+    frames = demux_blocks(
+        elements.where(F.col("name") == "SimpleBlock").select(
+            "chunk_id",
+            F.col("position").alias("frame_position"),
+            F.col("value_bin").alias("frame_payload"),
+        )
+    )
+    return frames.join(pivot_tags(elements), "chunk_id", "left")
+
+
+def test_fused_pass_equals_relational_composition(spark):
+    """The single-pass kvs_frames_with_tags must give the same schema
+    and the same multiset of rows as parse -> pivot_tags + demux_blocks
+    -> left join, on the corner cases either path could get wrong."""
+    from collections import Counter
+
+    from awskinesisconsumer_spark.sources.ebml import encode_unknown_size
+
+    def tag(name, value=None):
+        out = encode_element(TAG_NAME, name.encode())
+        return out if value is None else out + encode_element(
+            TAG_STRING, value.encode())
+
+    def block(body=b"FRAME", flags=0x80):
+        return encode_element(SIMPLE_BLOCK, b"\x81\x00\x07" + bytes([flags]) + body)
+
+    token = "AWS_KINESISVIDEO_CONTINUATION_TOKEN"
+    frag_no = "AWS_KINESISVIDEO_FRAGMENT_NUMBER"
+    behind = "AWS_KINESISVIDEO_MILLIS_BEHIND_NOW"
+    rows = [
+        (0, _fragment(0, 2)),
+        # tagless fragment
+        (1, block() + block(b"X", 0x00)),
+        # truncated block header next to a valid one
+        (2, tag(token, "t2") + encode_element(SIMPLE_BLOCK, b"\x81\x00")
+         + block()),
+        # duplicate TagName: last wins
+        (3, tag(token, "old") + tag(token, "new") + block()),
+        # TagString missing mid-stream
+        (4, tag(frag_no) + tag(token, "t4") + tag(behind, "4") + block()),
+        # trailing unpaired TagName
+        (5, tag(token, "t5") + block() + tag(token)),
+        # non-KVS TagName between KVS pairs, and a stray TagString
+        # before any TagName
+        (6, encode_element(TAG_STRING, b"stray") + tag(frag_no, "6")
+         + tag("TITLE", "a title") + tag(token, "t6") + block()),
+        # unknown-size SimpleBlock and unknown-size TagName: both
+        # descend, the TagString after the latter pairs with the
+        # previous named TagName
+        (7, tag(frag_no, "f7") + encode_unknown_size(TAG_NAME)
+         + encode_element(TAG_STRING, b"s7") + encode_unknown_size(SIMPLE_BLOCK)
+         + block(b"inner")),
+        # null payload
+        (8, None),
+        # tags but no frames: no rows
+        (9, tag(token, "t9") + tag(frag_no, "9")),
+        # byte-identical duplicate of chunk 0 (a replay)
+        (0, _fragment(0, 2)),
+        # laced block: header counts frames, payload stays whole
+        (10, tag(token, "t10") + block(b"\x02aabbcc", 0x04)),
+    ]
+    chunks = spark.createDataFrame(rows, "chunk_id bigint, payload binary")
+    fused, composed = kvs_frames_with_tags(chunks), _composed(chunks)
+    assert fused.schema == composed.schema
+    assert fused.columns[-len(KVS_TAG_NAMES):] == KVS_TAG_NAMES
+    assert len(fused.columns) == 13
+
+    def bag(collected):
+        return Counter(
+            tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                  for v in r)
+            for r in collected
+        )
+
+    fused_rows = fused.collect()
+    got, want = bag(fused_rows), bag(composed.collect())
+    assert got == want
+    # the cases above are really exercised, not vacuously equal
+    assert sum(got.values()) == 15
+    by_chunk = {}
+    for r in fused_rows:
+        by_chunk.setdefault(r.chunk_id, []).append(r)
+    assert len(by_chunk[0]) == 4 and 8 not in by_chunk and 9 not in by_chunk
+    assert {r.track for r in by_chunk[2]} == {None, 1}
+    assert by_chunk[7][0].AWS_KINESISVIDEO_FRAGMENT_NUMBER == "s7"
+    assert any(r.frame_payload is None for r in by_chunk[7])
+
+
+def test_frames_with_tags_is_one_narrow_stage(spark, chunks_df):
+    """One tokenizer pass and nothing that moves rows between tasks:
+    exactly one MapInPandas, no Exchange, no join."""
+    out = kvs_frames_with_tags(chunks_df)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan

@@ -443,7 +443,12 @@ def test_audit_report_scan_budget(spark):
     # shared KMV sketch (distinct estimate + the overlap matrix's
     # self-join), and the shared exact/ANN rankings feeding both
     # retrieval_metrics and rank_biased_overlap — 18 reads total in
-    # the r17 shape; a drop below 4 means a seam was lost
+    # the r17 shape. Pinned exactly, not as a floor: fewer reads means
+    # a consumer stopped reading a seam and re-derives its subtree
+    # (the file-scan budgets above would only catch that if the
+    # re-derivation crossed them), and more reads means a new consumer
+    # or seam changed the report's shape. Either way the count moves
+    # only with a deliberate edit of this number.
     assert sp.count("Scan ExistingRDD") == 18
 
 
