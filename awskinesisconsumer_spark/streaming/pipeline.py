@@ -19,6 +19,7 @@ error router is the one observe()-counted channel.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -129,83 +130,6 @@ def asof_join_stream(events: DataFrame,
             stateStructType=_ASOF_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=timeout,
-        )
-    )
-
-
-class AsofProcessor:
-    """transformWithStateInPandas form of the forward as-of join —
-    Spark 4's StatefulProcessor API with typed ListState for the
-    pending-packet buffer (vs the pickled tuple of the
-    applyInPandasWithState variant). Same semantics: a boundary row
-    flushes every buffered packet with its tag id and clears state
-    (ref parser.py:421-432 incl. the `del tags_line[:tags_i]` evict).
-    """
-
-    def init(self, handle) -> None:
-        self._pending = handle.getListState(
-            "pending", "event_id bigint, value double"
-        )
-
-    def handleInputRows(self, key, rows, timer_values):
-        import pandas as pd
-
-        buffered = [(int(r[0]), float(r[1])) for r in self._pending.get()]
-        out: list[tuple] = []
-        merged = _merge_sorted_chunks(rows)
-        if merged is not None:
-            for eid, etype, val in zip(
-                merged["event_id"], merged["event_type"], merged["value"]
-            ):
-                if etype == "signup":
-                    out.extend(
-                        (key[0], p_id, p_val, int(eid))
-                        for p_id, p_val in buffered
-                    )
-                    buffered = []
-                else:
-                    buffered.append((int(eid), float(val)))
-        self._pending.clear()
-        if buffered:
-            self._pending.put(buffered)
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "event_id", "value", "tag_event_id"]
-            )
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def handleInitialState(self, key, initial_state, timer_values) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def asof_join_stream_tws(events: DataFrame) -> DataFrame:
-    """The transformWithStateInPandas twin of asof_join_stream.
-
-    NOTE: Spark's TWS Python runner speaks protobuf to the state
-    server; environments without `google.protobuf` (like this offline
-    container) crash the runner at init, so this variant is
-    environment-gated (tests importorskip protobuf) and
-    applyInPandasWithState remains the default implementation."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires protobuf (state-server "
-            "protocol); use asof_join_stream() instead"
-        ) from e
-    return (
-        events.select("user_id", "event_id", "event_type", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            AsofProcessor(),
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
         )
     )
 
@@ -555,6 +479,24 @@ def hll_register_stream(events: DataFrame, *, p: int = 9) -> DataFrame:
     )
 
 
+def _start(df: DataFrame, write_batch, checkpoint: str,
+           available_now: bool, *, output_mode: str = "append"):
+    """Start `df` with `write_batch` as its foreachBatch sink and
+    `checkpoint` as its checkpoint location — the one start path of
+    every foreachBatch stream in this module. `available_now` drains
+    the backlog with Trigger.AvailableNow and stops; False keeps the
+    default processing-time trigger (a long-running query). Returns
+    the started StreamingQuery."""
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def incremental_dedup_stream(
     new_docs: DataFrame,
     corpus: DataFrame,
@@ -620,13 +562,7 @@ def incremental_dedup_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        new_docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(new_docs, write_batch, checkpoint, trigger_available_now)
 
 
 def semantic_decontaminate_stream(
@@ -680,13 +616,7 @@ def semantic_decontaminate_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        corpus_docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(corpus_docs, write_batch, checkpoint, trigger_available_now)
 
 
 def sentence_decontaminate_stream(
@@ -729,13 +659,7 @@ def sentence_decontaminate_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        corpus_docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(corpus_docs, write_batch, checkpoint, trigger_available_now)
 
 
 def importance_score_stream(
@@ -783,13 +707,7 @@ def importance_score_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        corpus_docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(corpus_docs, write_batch, checkpoint, trigger_available_now)
 
 
 def domain_cap_stream(
@@ -931,14 +849,9 @@ def corpus_drift_stream(
         drift = drift_from_term_counts(ref_counts, counts_df)
         _publish_atomic(drift, counts_df.sparkSession, out_path)
 
-    writer = (
-        running.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return DriftStreamHandle(writer.start(), ref_counts)
+    query = _start(running, write_batch, checkpoint,
+                   trigger_available_now, output_mode="complete")
+    return DriftStreamHandle(query, ref_counts)
 
 
 def grouped_drift_stream(
@@ -981,14 +894,9 @@ def grouped_drift_stream(
         drift = grouped_drift_from_counts(ref_counts, counts_df)
         _publish_atomic(drift, counts_df.sparkSession, out_path)
 
-    writer = (
-        running.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return DriftStreamHandle(writer.start(), ref_counts)
+    query = _start(running, write_batch, checkpoint,
+                   trigger_available_now, output_mode="complete")
+    return DriftStreamHandle(query, ref_counts)
 
 
 # swap-commit suffixes, shared by the drift monitors' published
@@ -1080,13 +988,7 @@ def vocab_coverage_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, write_batch, checkpoint, trigger_available_now)
 
 
 def quality_blend_stream(
@@ -1133,13 +1035,7 @@ def quality_blend_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, write_batch, checkpoint, trigger_available_now)
 
 
 def semantic_dedup_stream(
@@ -1229,13 +1125,7 @@ def semantic_dedup_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, write_batch, checkpoint, trigger_available_now)
 
 
 def frame_sample_stream(
@@ -1524,7 +1414,11 @@ def token_quota_stream(
 # (_swap_state_marker) for S3A-class object stores, where rename is
 # copy+delete and the rename protocol's guarantees silently weaken.
 # One switch covers every streaming state family: they all commit
-# through _swap_state and recover through _read_state.
+# through _swap_state and recover through _read_state. The counter
+# families' exactly-once SUM-merge lives in one place, `_sum_merge_fn`
+# and its two steps `_sum_state_needs` / `_sum_commit` (below
+# `_check_bid_lineage`); `_cms_merge_fn` runs the same two steps over
+# its two tables.
 _STATE_COMMIT_MODE = "rename"
 _MARKER_FILE = "_COMMITTED"
 
@@ -1752,8 +1646,8 @@ def _swap_state(merged_df, path: str, *, bid: int | None = None) -> None:
     instead; rename stays the fast path everywhere rename is
     atomic.
 
-    `bid` (sum-merge callers): the micro-batch id this commit
-    merges, recorded with the committed bytes' fingerprint in
+    `bid` (the sum-merge's `_sum_commit`): the micro-batch id this
+    commit merges, recorded with the committed bytes' fingerprint in
     `_BID_MEMO` so the NEXT trigger's `_state_batch_id` probe can
     skip its Spark job — see the memo contract above
     `_state_fingerprint`. Callers without a replay guard (KMV
@@ -1782,7 +1676,10 @@ def _swap_state(merged_df, path: str, *, bid: int | None = None) -> None:
 # (crash-window restore renames the aside back, checkpoint reset, a
 # second writer, process restart losing the memo) changes or misses
 # the fingerprint and falls back to the full probe, so every replay
-# contract the r15 tests pin is preserved bit-for-bit.
+# contract the r15 tests pin is preserved bit-for-bit. Premise: two
+# commits never share a fingerprint, even of identical rows, because
+# Spark names each part file `part-NNNNN-<write-job UUID>-c000...` and
+# every write job draws a fresh UUID.
 _BID_MEMO: dict[str, tuple[int, tuple]] = {}
 
 
@@ -1868,6 +1765,58 @@ def _check_bid_lineage(batch_id: int, stored: int | None,
         )
 
 
+# The sum-merge protocol shared by every counter family.
+# Counter SUM-merge is NOT idempotent and foreachBatch is
+# at-least-once, so each state table carries the last merged
+# micro-batch id in a `_bid` column (atomic with the data by
+# construction): a replay of that batch is skipped, an older batch
+# id is refused, and anything newer is unioned with the committed
+# counters, summed per key and committed stamped with its id.
+
+
+def _sum_state_needs(spark, path: str, batch_id: int):
+    """Step 1: (committed state at `path` or None, whether that table
+    still needs `batch_id`) — False on a replay of the batch it last
+    committed; a lower batch id raises (`_check_bid_lineage`)."""
+    prev = _read_state(spark, path)
+    bid = _state_batch_id(prev, path=path)
+    _check_bid_lineage(batch_id, bid, where=path)
+    return prev, bid != batch_id
+
+
+def _sum_commit(local, prev, keys: list[str], path: str,
+                batch_id: int) -> None:
+    """Step 2: SUM-merge the batch-local counters `local` (`keys` plus
+    counter columns) into the committed state `prev` and commit the
+    result to `path` stamped with `batch_id`. The stored table is
+    keys, counters (in `local`'s order), then `_bid`."""
+    sums = [c for c in local.columns if c not in keys]
+    both = (
+        local if prev is None
+        else local.unionByName(prev.select(*keys, *sums))
+    )
+    _swap_state(
+        both.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
+        .withColumn("_bid", F.lit(batch_id)),
+        path,
+        bid=batch_id,
+    )
+
+
+def _sum_merge_fn(count, keys: list[str], out_path: str):
+    """foreachBatch body of a one-table counter family: `count(batch_df)`
+    builds the batch-local counters keyed by `keys`, and the two steps
+    above merge them into `out_path` exactly once per batch id."""
+
+    def _merge(batch_df, batch_id: int) -> None:
+        prev, needed = _sum_state_needs(
+            batch_df.sparkSession, out_path, batch_id)
+        if needed:
+            _sum_commit(count(batch_df), prev, keys, out_path, batch_id)
+
+    return _merge
+
+
 def kmv_sketch_stream(
     stream_df,
     *,
@@ -1947,22 +1896,18 @@ def kmv_sketch_stream(
         )
         _swap_state(kmv_merge(both, k=k), out_path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_available_now)
 
 
 def _cms_merge_fn(*, text_col, depth, width, salt, hash_fn,
                   sketch_path, terms_path):
     """The cms_sketch_stream foreachBatch body as a module-level
     factory so the replay / crash-window contracts are directly
-    testable with explicit (batch_df, batch_id) calls."""
-    from pyspark.sql import functions as F
-
+    testable with explicit (batch_df, batch_id) calls. Two tables on
+    the shared sum-merge steps (`_sum_state_needs`, `_sum_commit`):
+    they commit one after the other, so both "needed" flags are read
+    before either commit — a crash between the commits leaves the
+    leader skippable and only the laggard re-merged."""
     from awskinesisconsumer_spark.operators.sketches import (
         cms_build, cms_tokens,
     )
@@ -1971,60 +1916,21 @@ def _cms_merge_fn(*, text_col, depth, width, salt, hash_fn,
 
     def _merge(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Counter SUM-merge is NOT idempotent, so each table carries
-        # the last merged micro-batch id in a `_bid` column (atomic
-        # with the data by construction) and a replayed batch skips
-        # tables that already committed it — foreachBatch is
-        # at-least-once, and the two tables commit one after the
-        # other, so a crash between them must leave the leader
-        # skippable and only the laggard re-merged.
-        prev_sketch = _read_state(spark, sketch_path)
-        prev_terms = _read_state(spark, terms_path)
-        sk_bid = _state_batch_id(prev_sketch, path=sketch_path)
-        tm_bid = _state_batch_id(prev_terms, path=terms_path)
-        _check_bid_lineage(batch_id, sk_bid, where=sketch_path)
-        _check_bid_lineage(batch_id, tm_bid, where=terms_path)
-        need_sk = sk_bid != batch_id
-        need_tm = tm_bid != batch_id
+        prev_sk, need_sk = _sum_state_needs(spark, sketch_path, batch_id)
+        prev_tm, need_tm = _sum_state_needs(spark, terms_path, batch_id)
         if not (need_sk or need_tm):
             return
         tok = cms_tokens(batch_df, text_col=text_col).persist()
         try:
             if need_sk:
-                local_sketch = cms_build(
+                _sum_commit(cms_build(
                     tok, term_col="term", depth=depth, width=width,
                     salt=salt, **kw,
-                )
-                sk = (
-                    local_sketch if prev_sketch is None
-                    else local_sketch.unionByName(
-                        prev_sketch.select("row", "bucket", "n")
-                    )
-                )
-                _swap_state(
-                    sk.groupBy("row", "bucket")
-                    .agg(F.sum("n").alias("n"))
-                    .withColumn("_bid", F.lit(batch_id)),
-                    sketch_path,
-                    bid=batch_id,
-                )
+                ), prev_sk, ["row", "bucket"], sketch_path, batch_id)
             if need_tm:
-                local_terms = tok.groupBy("term").agg(
+                _sum_commit(tok.groupBy("term").agg(
                     F.count(F.lit(1)).alias("exact")
-                )
-                tm = (
-                    local_terms if prev_terms is None
-                    else local_terms.unionByName(
-                        prev_terms.select("term", "exact")
-                    )
-                )
-                _swap_state(
-                    tm.groupBy("term")
-                    .agg(F.sum("exact").alias("exact"))
-                    .withColumn("_bid", F.lit(batch_id)),
-                    terms_path,
-                    bid=batch_id,
-                )
+                ), prev_tm, ["term"], terms_path, batch_id)
         finally:
             # a failed commit retries through the checkpoint, which
             # persists a FRESH tok — without the finally every retry
@@ -2075,52 +1981,24 @@ def cms_sketch_stream(
 
     Returns the started StreamingQuery.
     """
-    writer = (
-        docs.writeStream.foreachBatch(_cms_merge_fn(
-            text_col=text_col, depth=depth, width=width, salt=salt,
-            hash_fn=hash_fn, sketch_path=sketch_path,
-            terms_path=terms_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, _cms_merge_fn(
+        text_col=text_col, depth=depth, width=width, salt=salt,
+        hash_fn=hash_fn, sketch_path=sketch_path,
+        terms_path=terms_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _hist_merge_fn(*, value_col, lo, hi, n_bins, out_path):
-    """histogram_counts_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """histogram_counts_stream's foreachBatch body: the shared
+    sum-merge protocol (`_sum_merge_fn`) over (bin, c) counts."""
     from awskinesisconsumer_spark.operators.sketches import (
         histogram_bin_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # SUM-merge replay guard + swap-rename commit — see
-        # _cms_merge_fn for the at-least-once rationale.
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = histogram_bin_counts(
-            batch_df, value_col=value_col, lo=lo, hi=hi, n_bins=n_bins
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("bin", "c"))
-        )
-        _swap_state(
-            both.groupBy("bin").agg(F.sum("c").alias("c"))
-            .withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        histogram_bin_counts, value_col=value_col, lo=lo, hi=hi,
+        n_bins=n_bins,
+    ), ["bin"], out_path)
 
 
 def histogram_counts_stream(
@@ -2148,52 +2026,23 @@ def histogram_counts_stream(
     cms_sketch_stream — counter sums are not replay-idempotent).
     Returns the started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_hist_merge_fn(
-            value_col=value_col, lo=lo, hi=hi, n_bins=n_bins,
-            out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _hist_merge_fn(
+        value_col=value_col, lo=lo, hi=hi, n_bins=n_bins,
+        out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _confusion_merge_fn(*, label_col, pred_col, out_path):
-    """confusion_counts_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn / _hist_merge_fn
-    pattern)."""
-    from pyspark.sql import functions as F
-
+    """confusion_counts_stream's foreachBatch body: the shared
+    sum-merge protocol (`_sum_merge_fn`) over (label, pred, n)
+    counts."""
     from awskinesisconsumer_spark.operators.evaluation import (
         confusion_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # SUM-merge replay guard + swap-rename commit — see
-        # _cms_merge_fn for the at-least-once rationale.
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = confusion_counts(
-            batch_df, label_col=label_col, pred_col=pred_col
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("label", "pred", "n"))
-        )
-        _swap_state(
-            both.groupBy("label", "pred").agg(F.sum("n").alias("n"))
-            .withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        confusion_counts, label_col=label_col, pred_col=pred_col,
+    ), ["label", "pred"], out_path)
 
 
 def confusion_counts_stream(
@@ -2222,54 +2071,23 @@ def confusion_counts_stream(
     `_bid` replay guard (counter sums are not replay-idempotent).
     Returns the started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_confusion_merge_fn(
-            label_col=label_col, pred_col=pred_col, out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _confusion_merge_fn(
+        label_col=label_col, pred_col=pred_col, out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _psi_merge_fn(*, value_col, group_col, group_a, group_b, lo, hi,
                   n_bins, out_path):
-    """psi_drift_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """psi_drift_stream's foreachBatch body: the shared sum-merge
+    protocol (`_sum_merge_fn`) over (bin, ca, cb) counts."""
     from awskinesisconsumer_spark.operators.evaluation import (
         psi_binned_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # SUM-merge replay guard + swap-rename commit — see
-        # _cms_merge_fn for the at-least-once rationale.
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = psi_binned_counts(
-            batch_df, value_col=value_col, group_col=group_col,
-            group_a=group_a, group_b=group_b, n_bins=n_bins,
-            lo=lo, hi=hi,
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("bin", "ca", "cb"))
-        )
-        _swap_state(
-            both.groupBy("bin").agg(
-                F.sum("ca").alias("ca"), F.sum("cb").alias("cb")
-            ).withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        psi_binned_counts, value_col=value_col, group_col=group_col,
+        group_a=group_a, group_b=group_b, n_bins=n_bins, lo=lo, hi=hi,
+    ), ["bin"], out_path)
 
 
 def psi_drift_stream(
@@ -2305,52 +2123,24 @@ def psi_drift_stream(
     (counter sums are not replay-idempotent). Returns the started
     StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_psi_merge_fn(
-            value_col=value_col, group_col=group_col,
-            group_a=group_a, group_b=group_b, lo=lo, hi=hi,
-            n_bins=n_bins, out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _psi_merge_fn(
+        value_col=value_col, group_col=group_col,
+        group_a=group_a, group_b=group_b, lo=lo, hi=hi,
+        n_bins=n_bins, out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _ks_merge_fn(*, value_col, group_col, group_a, group_b, out_path):
-    """ks_drift_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """ks_drift_stream's foreachBatch body: the shared sum-merge
+    protocol (`_sum_merge_fn`) over (val, ca, cb) counts."""
     from awskinesisconsumer_spark.operators.evaluation import (
         ks_value_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = ks_value_counts(
-            batch_df, value_col=value_col, group_col=group_col,
-            group_a=group_a, group_b=group_b,
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("val", "ca", "cb"))
-        )
-        _swap_state(
-            both.groupBy("val").agg(
-                F.sum("ca").alias("ca"), F.sum("cb").alias("cb")
-            ).withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        ks_value_counts, value_col=value_col, group_col=group_col,
+        group_a=group_a, group_b=group_b,
+    ), ["val"], out_path)
 
 
 def ks_drift_stream(
@@ -2382,47 +2172,22 @@ def ks_drift_stream(
     choices. Commits through the swap-rename protocol with the
     `_bid` replay guard. Returns the started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_ks_merge_fn(
-            value_col=value_col, group_col=group_col,
-            group_a=group_a, group_b=group_b, out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _ks_merge_fn(
+        value_col=value_col, group_col=group_col,
+        group_a=group_a, group_b=group_b, out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _chao1_merge_fn(*, text_col, out_path):
-    """chao1_vocab_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """chao1_vocab_stream's foreachBatch body: the shared sum-merge
+    protocol (`_sum_merge_fn`) over (term, n) counts."""
     from awskinesisconsumer_spark.operators.evaluation import (
         chao1_term_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = chao1_term_counts(batch_df, text_col=text_col)
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("term", "n"))
-        )
-        _swap_state(
-            both.groupBy("term").agg(F.sum("n").alias("n"))
-            .withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(
+        partial(chao1_term_counts, text_col=text_col), ["term"], out_path
+    )
 
 
 def chao1_vocab_stream(
@@ -2449,52 +2214,23 @@ def chao1_vocab_stream(
     guard (counter sums are not replay-idempotent). Returns the
     started StreamingQuery.
     """
-    writer = (
-        docs.writeStream.foreachBatch(_chao1_merge_fn(
-            text_col=text_col, out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, _chao1_merge_fn(
+        text_col=text_col, out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _bootstrap_merge_fn(*, id_col, value_col, group_col, n_boot, salt,
                         hash_fn, out_path):
-    """bootstrap_ci_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """bootstrap_ci_stream's foreachBatch body: the shared sum-merge
+    protocol (`_sum_merge_fn`) over (_g, b, wv, wn) sums."""
     from awskinesisconsumer_spark.operators.evaluation import (
         bootstrap_replicate_sums,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = bootstrap_replicate_sums(
-            batch_df, id_col=id_col, value_col=value_col,
-            group_col=group_col, n_boot=n_boot, salt=salt,
-            hash_fn=hash_fn,
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("_g", "b", "wv", "wn"))
-        )
-        _swap_state(
-            both.groupBy("_g", "b").agg(
-                F.sum("wv").alias("wv"), F.sum("wn").alias("wn")
-            ).withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        bootstrap_replicate_sums, id_col=id_col, value_col=value_col,
+        group_col=group_col, n_boot=n_boot, salt=salt, hash_fn=hash_fn,
+    ), ["_g", "b"], out_path)
 
 
 def bootstrap_ci_stream(
@@ -2526,52 +2262,24 @@ def bootstrap_ci_stream(
     swap-rename protocol with the `_bid` replay guard. Returns the
     started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_bootstrap_merge_fn(
-            id_col=id_col, value_col=value_col, group_col=group_col,
-            n_boot=n_boot, salt=salt, hash_fn=hash_fn,
-            out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _bootstrap_merge_fn(
+        id_col=id_col, value_col=value_col, group_col=group_col,
+        n_boot=n_boot, salt=salt, hash_fn=hash_fn,
+        out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _kappa_merge_fn(*, rater_a_col, rater_b_col, out_path):
-    """cohen_kappa_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """cohen_kappa_stream's foreachBatch body: the shared sum-merge
+    protocol (`_sum_merge_fn`) over (label_a, label_b, n) counts."""
     from awskinesisconsumer_spark.operators.evaluation import (
         kappa_pair_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = kappa_pair_counts(
-            batch_df, rater_a_col=rater_a_col, rater_b_col=rater_b_col
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(
-                prev.select("label_a", "label_b", "n"))
-        )
-        _swap_state(
-            both.groupBy("label_a", "label_b")
-            .agg(F.sum("n").alias("n"))
-            .withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        kappa_pair_counts, rater_a_col=rater_a_col,
+        rater_b_col=rater_b_col,
+    ), ["label_a", "label_b"], out_path)
 
 
 def cohen_kappa_stream(
@@ -2598,55 +2306,24 @@ def cohen_kappa_stream(
     swap-rename protocol with the `_bid` replay guard. Returns the
     started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_kappa_merge_fn(
-            rater_a_col=rater_a_col, rater_b_col=rater_b_col,
-            out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _kappa_merge_fn(
+        rater_a_col=rater_a_col, rater_b_col=rater_b_col,
+        out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _ece_merge_fn(*, label_col, pred_col, conf_col, group_col, n_bins,
                   out_path):
-    """ece_stream's foreachBatch body as a testable module-level
-    factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """ece_stream's foreachBatch body: the shared sum-merge protocol
+    (`_sum_merge_fn`) over (group, bin, nb, ok, c6) counts."""
     from awskinesisconsumer_spark.operators.evaluation import (
         ece_binned_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = ece_binned_counts(
-            batch_df, label_col=label_col, pred_col=pred_col,
-            conf_col=conf_col, n_bins=n_bins, group_col=group_col,
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(
-                prev.select("group", "bin", "nb", "ok", "c6"))
-        )
-        _swap_state(
-            both.groupBy("group", "bin").agg(
-                F.sum("nb").alias("nb"),
-                F.sum("ok").alias("ok"),
-                F.sum("c6").alias("c6"),
-            ).withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        ece_binned_counts, label_col=label_col, pred_col=pred_col,
+        conf_col=conf_col, n_bins=n_bins, group_col=group_col,
+    ), ["group", "bin"], out_path)
 
 
 def ece_stream(
@@ -2676,56 +2353,25 @@ def ece_stream(
     guard (counter sums are not replay-idempotent). Returns the
     started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_ece_merge_fn(
-            label_col=label_col, pred_col=pred_col,
-            conf_col=conf_col, group_col=group_col, n_bins=n_bins,
-            out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _ece_merge_fn(
+        label_col=label_col, pred_col=pred_col,
+        conf_col=conf_col, group_col=group_col, n_bins=n_bins,
+        out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def _brier_merge_fn(*, label_col, pred_col, conf_col, group_col,
                     out_path):
-    """brier_stream's foreachBatch body as a testable module-level
-    factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """brier_stream's foreachBatch body: the shared sum-merge protocol
+    (`_sum_merge_fn`) over (group, n_items, oks, sq) sums."""
     from awskinesisconsumer_spark.operators.evaluation import (
         brier_sums,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = brier_sums(
-            batch_df, label_col=label_col, pred_col=pred_col,
-            conf_col=conf_col, group_col=group_col,
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(
-                prev.select("group", "n_items", "oks", "sq"))
-        )
-        _swap_state(
-            both.groupBy("group").agg(
-                F.sum("n_items").alias("n_items"),
-                F.sum("oks").alias("oks"),
-                F.sum("sq").alias("sq"),
-            ).withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        brier_sums, label_col=label_col, pred_col=pred_col,
+        conf_col=conf_col, group_col=group_col,
+    ), ["group"], out_path)
 
 
 def brier_stream(
@@ -2751,17 +2397,11 @@ def brier_stream(
     swap-rename protocol with the `_bid` replay guard. Returns the
     started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_brier_merge_fn(
-            label_col=label_col, pred_col=pred_col,
-            conf_col=conf_col, group_col=group_col,
-            out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _brier_merge_fn(
+        label_col=label_col, pred_col=pred_col,
+        conf_col=conf_col, group_col=group_col,
+        out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def percentile_gate_stream(
@@ -2807,46 +2447,17 @@ def percentile_gate_stream(
         )
         out.write.mode("append").parquet(out_path)
 
-    writer = (
-        rows.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, write_batch, checkpoint, trigger_available_now)
 
 
 def _auc_merge_fn(*, label_col, score_col, out_path):
-    """auc_stream's foreachBatch body as a testable module-level
-    factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """auc_stream's foreachBatch body: the shared sum-merge protocol
+    (`_sum_merge_fn`) over (score, pos, neg) counts."""
     from awskinesisconsumer_spark.operators.evaluation import auc_counts
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = auc_counts(
-            batch_df, label_col=label_col, score_col=score_col
-        )
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("score", "pos", "neg"))
-        )
-        _swap_state(
-            both.groupBy("score").agg(
-                F.sum("pos").alias("pos"),
-                F.sum("neg").alias("neg"),
-            ).withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        auc_counts, label_col=label_col, score_col=score_col,
+    ), ["score"], out_path)
 
 
 def auc_stream(
@@ -2870,16 +2481,10 @@ def auc_stream(
     through the swap-rename protocol with the `_bid` replay guard.
     Returns the started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_auc_merge_fn(
-            label_col=label_col, score_col=score_col,
-            out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _auc_merge_fn(
+        label_col=label_col, score_col=score_col,
+        out_path=out_path,
+    ), checkpoint, trigger_available_now)
 
 
 def pr_auc_stream(
@@ -2908,35 +2513,15 @@ def pr_auc_stream(
 
 
 def _rankcorr_merge_fn(*, a_col, b_col, out_path):
-    """rankcorr_stream's foreachBatch body as a testable
-    module-level factory (the _cms_merge_fn pattern)."""
-    from pyspark.sql import functions as F
-
+    """rankcorr_stream's foreachBatch body: the shared sum-merge
+    protocol (`_sum_merge_fn`) over (a, b, n) counts."""
     from awskinesisconsumer_spark.operators.evaluation import (
         rankcorr_counts,
     )
 
-    def _merge(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _read_state(spark, out_path)
-        bid = _state_batch_id(prev, path=out_path)
-        _check_bid_lineage(batch_id, bid, where=out_path)
-        if bid == batch_id:
-            return
-        local = rankcorr_counts(batch_df, a_col=a_col, b_col=b_col)
-        both = (
-            local if prev is None
-            else local.unionByName(prev.select("a", "b", "n"))
-        )
-        _swap_state(
-            both.groupBy("a", "b").agg(
-                F.sum("n").alias("n"),
-            ).withColumn("_bid", F.lit(batch_id)),
-            out_path,
-            bid=batch_id,
-        )
-
-    return _merge
+    return _sum_merge_fn(partial(
+        rankcorr_counts, a_col=a_col, b_col=b_col,
+    ), ["a", "b"], out_path)
 
 
 def rankcorr_stream(
@@ -2962,12 +2547,6 @@ def rankcorr_stream(
     the swap-rename (or marker) protocol with the `_bid` replay
     guard. Returns the started StreamingQuery.
     """
-    writer = (
-        rows.writeStream.foreachBatch(_rankcorr_merge_fn(
-            a_col=a_col, b_col=b_col, out_path=out_path,
-        ))
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _rankcorr_merge_fn(
+        a_col=a_col, b_col=b_col, out_path=out_path,
+    ), checkpoint, trigger_available_now)

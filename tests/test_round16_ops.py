@@ -210,15 +210,36 @@ def _state_rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
+# the committed state layout per family and state path: keys, then
+# counters, then `_bid` last — a refactor of the merge must not move
+# a column (consumers and restarted streams read these tables)
+_STATE_COLUMNS = {
+    "cms": [["row", "bucket", "n", "_bid"], ["term", "exact", "_bid"]],
+    "hist": [["bin", "c", "_bid"]],
+    "confusion": [["label", "pred", "n", "_bid"]],
+    "psi": [["bin", "ca", "cb", "_bid"]],
+    "ks": [["val", "ca", "cb", "_bid"]],
+    "chao1": [["term", "n", "_bid"]],
+    "bootstrap": [["_g", "b", "wv", "wn", "_bid"]],
+    "kappa": [["label_a", "label_b", "n", "_bid"]],
+    "ece": [["group", "bin", "nb", "ok", "c6", "_bid"]],
+    "brier": [["group", "n_items", "oks", "sq", "_bid"]],
+    "auc": [["score", "pos", "neg", "_bid"]],
+    "rankcorr": [["a", "b", "n", "_bid"]],
+}
+
+
 @pytest.mark.parametrize("family", _FAMILIES)
 def test_maintainer_family_commit_mode_matrix(spark, tmp_path, family):
     # r15 verdict item 5: marker-mode was proven end-to-end through
     # ONE merge_fn; the other families ran it only by construction-
     # sharing. This matrix runs EVERY family's merge sequence (two
     # batches + a replay) under BOTH commit protocols and asserts
-    # (a) the replay is a no-op in each mode and (b) the committed
+    # (a) the replay is a no-op in each mode, (b) the committed
     # state is IDENTICAL across modes — a family that bypassed
-    # _swap_state would diverge or lose the replay guard here.
+    # _swap_state would diverge or lose the replay guard here — (c)
+    # the state keeps its pinned column layout and (d) an older batch
+    # id is refused by the lineage check.
     import awskinesisconsumer_spark.streaming.pipeline as P
 
     factory, n_paths, batches = _family_case(spark, family)
@@ -236,9 +257,14 @@ def test_maintainer_family_commit_mode_matrix(spark, tmp_path, family):
             merge(batches[1], 1)  # checkpoint replay after a crash
             snap2 = [_state_rows(P._read_state(spark, p))
                      for p in paths]
+            cols = [P._read_state(spark, p).columns for p in paths]
+            # a batch id below the committed one is a reset lineage
+            with pytest.raises(ValueError, match="checkpoint reset"):
+                merge(batches[0], 0)
         finally:
             P.set_state_commit_mode("rename")
         assert snap == snap2, f"{family}/{mode}: replay mutated state"
+        assert cols == _STATE_COLUMNS[family], f"{family}/{mode}: layout"
         states[mode] = snap
     assert states["rename"] == states["marker"], (
         f"{family}: rename-mode and marker-mode commits diverged"

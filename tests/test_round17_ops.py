@@ -155,6 +155,59 @@ def test_bid_memo_replay_skip_equals_probe(spark, tmp_path):
     assert sum(got.values()) == 3  # no double count
 
 
+@pytest.mark.parametrize("mode", ["rename", "marker"])
+def test_state_fingerprint_differs_for_identical_commits(
+        spark, tmp_path, mode):
+    # the memo's premise: two commits of IDENTICAL rows to one path
+    # still fingerprint apart (each write job names its part files
+    # with a fresh UUID), so a stale memo can never alias a new commit
+    from awskinesisconsumer_spark.streaming import pipeline as P
+
+    st = str(tmp_path / "state")
+    df = spark.createDataFrame([("a", 1)], "k string, n long") \
+        .withColumn("_bid", F.lit(0))
+    P.set_state_commit_mode(mode)
+    try:
+        P._swap_state(df, st, bid=0)
+        fp0 = P._state_fingerprint(spark, st)
+        P._swap_state(df, st, bid=0)
+        fp1 = P._state_fingerprint(spark, st)
+    finally:
+        P.set_state_commit_mode("rename")
+    assert fp0 is not None and fp1 is not None
+    assert fp0 != fp1
+    # not only the marker version name: the part names differ too
+    assert fp0[1] != fp1[1]
+
+
+def test_counter_stream_runs_without_available_now(spark, tmp_path):
+    # trigger_available_now=False starts a long-running query on the
+    # default trigger (the events-stateful benchmark's setting); it
+    # must merge like the AvailableNow form and stay active until
+    # stopped
+    from awskinesisconsumer_spark.streaming.pipeline import (
+        histogram_counts_stream,
+    )
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1.0,), (1.5,), (9.0,)], "v double"
+    ).write.parquet(src)
+    out = str(tmp_path / "hist")
+    q = histogram_counts_stream(
+        spark.readStream.schema("v double").parquet(src),
+        value_col="v", lo=0.0, hi=10.0, n_bins=5, out_path=out,
+        checkpoint=str(tmp_path / "ckpt"), trigger_available_now=False,
+    )
+    try:
+        q.processAllAvailable()
+        assert q.isActive
+    finally:
+        q.stop()
+    got = {r["bin"]: r["c"] for r in spark.read.parquet(out).collect()}
+    assert got == {0: 2, 4: 1}
+
+
 def test_fan_out_small_malformed_env_falls_back(spark, monkeypatch):
     from awskinesisconsumer_spark.operators.skew import fan_out_small
 

@@ -68,37 +68,6 @@ def test_asof_stream_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_asof_tws_variant(spark, tmp_path):
-    """transformWithStateInPandas twin: runs (and matches the batch
-    as-of) where protobuf is available; raises a clear ImportError
-    where not."""
-    from awskinesisconsumer_spark.streaming.pipeline import asof_join_stream_tws
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            asof_join_stream_tws(events_stream(spark, SF))
-        return
-
-    out = asof_join_stream_tws(events_stream(spark, SF))
-    _run_available_now(out, tmp_path, "asof_tws")
-    got = {
-        (r.user_id, r.event_id): r.tag_event_id
-        for r in spark.sql("SELECT * FROM asof_tws").collect()
-    }
-    want = {
-        (r.user_id, r.event_id): r.tag_event_id
-        for r in asof_join_next_boundary(
-            load_table(spark, "events", SF),
-            key="user_id", order="event_id",
-            is_boundary=F.col("event_type") == "signup",
-            boundary_cols=[],
-        ).where(F.col("tag_event_id").isNotNull()).collect()
-    }
-    assert got == want
-
-
 def test_segment_rollup_stream_runs(spark, tmp_path):
     stream = events_stream(spark, SF)
     out = segment_rollup_stream(stream, gap="30 minutes")
