@@ -49,6 +49,11 @@ def _safe_div(num, denom):
     return F.when(denom > 0, num / denom)
 
 
+# 4 MiB (the default size gate) of 64-dim float64 rows: 8192 rows, a
+# 512 MiB dense score matrix if they all land in one cell.
+_MAX_KERNEL_CELL = 8192
+
+
 def _resolve_vectorized(df: DataFrame, id_col: str,
                         vectorized: bool | None,
                         cell_cap: int | None = None) -> bool:
@@ -69,7 +74,10 @@ def _resolve_vectorized(df: DataFrame, id_col: str,
 
     * `cell_cap` is set (the enforcement the semantic_dedup
       docstring names: capped cells are excluded from the mine, so
-      no task sees more than cell_cap rows), or
+      no task sees more than cell_cap rows) and at most
+      `_MAX_KERNEL_CELL`, so its cell_cap^2 x 8-byte matrix is no
+      larger than the worst case the size gate below admits; a
+      larger cap proves nothing and falls through to that gate, or
     * the plan-estimated size of the WHOLE input is small enough
       that even the degenerate all-rows-in-one-cell case fits a
       task comfortably ($SPARK_GRAFT_SEMDEDUP_AUTO_BYTES, default
@@ -88,7 +96,7 @@ def _resolve_vectorized(df: DataFrame, id_col: str,
 
     if not isinstance(df.schema[id_col].dataType, LongType):
         return False
-    if cell_cap is not None:
+    if cell_cap is not None and cell_cap <= _MAX_KERNEL_CELL:
         return True
     import os
 

@@ -3,17 +3,29 @@ VANILLA SparkSession and compare against their DuckDB twins at
 sf0.01 (the full_oracle_sweep.py comparison, without the other ~270
 entries) — the optimization round's per-change correctness gate.
 
+Checks the checkout this script lives in, on $SPARK_GRAFT_CPUS cores
+(default: every core this process may run on).
+
 Usage: python scripts/oracle_check.py <query> [<query> ...]
 """
 import math
+import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+# Spark's Python workers unpickle this checkout's code too.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p)
 import __spark_entry__ as m  # noqa: E402
+
+if not Path(m.__file__).resolve().is_relative_to(ROOT):
+    raise SystemExit(f"imported {m.__file__}, not the checkout at {ROOT}")
 
 SF = "/root/testdata/sf0.01"
 
@@ -30,7 +42,8 @@ def canon(v):
 
 
 def main() -> int:
-    spark = SparkSession.builder.master("local[16]").getOrCreate()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem "

@@ -39,8 +39,11 @@ def test_auto_kernel_requires_bounded_memory_regime(spark, monkeypatch):
     # one-task-per-cell regime safe" (simulated via the env knob)
     monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_AUTO_BYTES", "1")
     assert _resolve_vectorized(base, "vec_id", None) is False
-    # ... but cell_cap still opts in
+    # ... but cell_cap still opts in, while its cell_cap^2 x 8-byte
+    # matrix fits the 512 MiB the default size gate admits
     assert _resolve_vectorized(base, "vec_id", None, 64) is True
+    assert _resolve_vectorized(base, "vec_id", None, 8192) is True
+    assert _resolve_vectorized(base, "vec_id", None, 8193) is False
     # malformed env must fall back, not raise at plan-build time
     monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_AUTO_BYTES", "not-a-number")
     assert _resolve_vectorized(base, "vec_id", None) is True
