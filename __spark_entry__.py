@@ -11,6 +11,10 @@ flip the driver's value hash.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
+import inspect
+import json
 import os
 from collections.abc import Callable
 
@@ -1778,8 +1782,9 @@ def _kvs_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
     # NOT fanned out (r16 optimization round): the interleaved on/off
     # A/B on the frame-sample/png entries measured the size-gated
-    # fan-out a wash-to-loss — the encode is cheap and the pivot's
-    # own groupBy shuffles right after it.
+    # fan-out a wash-to-loss — the encode is cheap, and the
+    # chunk-local parse pass that follows it needs no shuffle, so
+    # the fan-out's exchange would be the plan's only one.
     chunks = docs.mapInPandas(encode, "chunk_id bigint, payload binary")
     out = kvs_frames_with_tags(chunks)
     return out.select(
@@ -1833,6 +1838,22 @@ def _multimodal(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _gate_shuffle_partitions(spark: SparkSession):
+    """Run the block with 8 shuffle partitions, restoring the session's
+    value on exit. Stateful streaming runs one task per state partition
+    per micro-batch; a vanilla session's 200 are pure scheduling
+    overhead at harness SF. The count is baked into a fresh checkpoint
+    at first start, so scoping the conf to the queries started inside
+    the block is safe."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def _run_stream_to_table(df, spark: SparkSession, prefix: str,
                          mode: str = "append") -> DataFrame:
     """Execute a streaming DF to completion (AvailableNow) into a
@@ -1843,14 +1864,7 @@ def _run_stream_to_table(df, spark: SparkSession, prefix: str,
 
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    # Stateful streaming runs one task per state partition per
-    # micro-batch; a vanilla session's 200 shuffle partitions are pure
-    # scheduling overhead at harness SF. The count is baked into the
-    # (fresh) checkpoint at first start, so scoping the conf to this
-    # query is safe — restore afterwards.
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _gate_shuffle_partitions(spark):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -1866,8 +1880,6 @@ def _run_stream_to_table(df, spark: SparkSession, prefix: str,
             raise RuntimeError(
                 f"streaming query {name} did not finish within 300 s"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)
 
 
@@ -2034,9 +2046,7 @@ def _stream_restart_resume(spark: SparkSession, sf: str) -> DataFrame:
     ev.where(F.unix_timestamp("ts") <= mid).coalesce(1).write.parquet(src)
     schema = ev.schema
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _gate_shuffle_partitions(spark):
         def run_phase() -> None:
             stream = spark.readStream.schema(schema).parquet(src)
             q = (
@@ -2056,8 +2066,6 @@ def _stream_restart_resume(spark: SparkSession, sf: str) -> DataFrame:
         ev.where(F.unix_timestamp("ts") > mid).coalesce(1) \
             .write.mode("append").parquet(src)
         run_phase()  # phase 2: resumes offsets + window state
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.read.parquet(sink).select(
         "w_start", "w_end", "n_events", "sum_value", "max_event_id"
     )
@@ -2117,37 +2125,35 @@ def _stream_pause_resume(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    handle = PipelineHandle(spark, factory)
-    try:
-        if not handle.start().awaitTermination(300):
-            raise RuntimeError("pause-gate phase 1 timed out")
-        handle.pause()  # state + offsets persist across the gap
-        ev.where(F.unix_timestamp("ts") > mid).coalesce(1) \
-            .write.mode("append").parquet(src)
-        if not handle.resume().awaitTermination(300):
-            raise RuntimeError("pause-gate phase 2 timed out")
-        # Progress events reach the listener on its own bus thread —
-        # bounded wait for the final batch's metric to land (normally
-        # instant; generous bound for a loaded gate host). A timeout
-        # RAISES like the phase timeouts do: a silently stale counter
-        # would surface as an opaque value mismatch at the gate.
-        deadline = _time.monotonic() + 90.0
-        while True:
-            n_obs = handle.listener.observed_totals("pause_gate") \
-                .get("n_rows", 0)
-            if n_obs >= n_events:
-                break
-            if _time.monotonic() >= deadline:
-                raise RuntimeError(
-                    f"pause-gate listener saw {n_obs}/{n_events} rows "
-                    "after 90 s — progress events lost or delayed"
-                )
-            _time.sleep(0.25)
-    finally:
-        handle.dispose()
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    with _gate_shuffle_partitions(spark):
+        handle = PipelineHandle(spark, factory)
+        try:
+            if not handle.start().awaitTermination(300):
+                raise RuntimeError("pause-gate phase 1 timed out")
+            handle.pause()  # state + offsets persist across the gap
+            ev.where(F.unix_timestamp("ts") > mid).coalesce(1) \
+                .write.mode("append").parquet(src)
+            if not handle.resume().awaitTermination(300):
+                raise RuntimeError("pause-gate phase 2 timed out")
+            # Progress events reach the listener on its own bus thread —
+            # bounded wait for the final batch's metric to land (normally
+            # instant; generous bound for a loaded gate host). A timeout
+            # RAISES like the phase timeouts do: a silently stale counter
+            # would surface as an opaque value mismatch at the gate.
+            deadline = _time.monotonic() + 90.0
+            while True:
+                n_obs = handle.listener.observed_totals("pause_gate") \
+                    .get("n_rows", 0)
+                if n_obs >= n_events:
+                    break
+                if _time.monotonic() >= deadline:
+                    raise RuntimeError(
+                        f"pause-gate listener saw {n_obs}/{n_events} rows "
+                        "after 90 s — progress events lost or delayed"
+                    )
+                _time.sleep(0.25)
+        finally:
+            handle.dispose()
     return spark.read.parquet(sink).select(
         "w_start", "w_end", "n_events", "sum_value", "max_event_id",
     ).withColumn("observed_rows", F.lit(int(n_obs)).cast("long"))
@@ -2184,9 +2190,7 @@ def _sink_memory_bounded(spark: SparkSession, sf: str) -> DataFrame:
         .parquet(src)
     )
     sink = BoundedMemorySink(k=100)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _gate_shuffle_partitions(spark):
         # partition_col=None: user_id is high-cardinality in this
         # fixture — partitioning the tee by it would write thousands
         # of tiny files per batch (see start_fanout docstring).
@@ -2200,8 +2204,6 @@ def _sink_memory_bounded(spark: SparkSession, sf: str) -> DataFrame:
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError("sink-memory-bounded timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     rows = [sink.get(i) for i in range(len(sink))]
     return spark.createDataFrame(
         rows,
@@ -2953,9 +2955,7 @@ def _stream_domain_cap(spark: SparkSession, sf: str) -> DataFrame:
     # scheduling overhead (same artifact-scale rationale as the other
     # stream entries above). At 100 TB the count is sized to the
     # cluster instead — state stays one long per domain either way.
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _gate_shuffle_partitions(spark):
         q = (
             out.writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -2966,8 +2966,6 @@ def _stream_domain_cap(spark: SparkSession, sf: str) -> DataFrame:
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError("stream-domain-cap: stream timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     n_batches = len(
         [p for p in q.recentProgress if p["numInputRows"] > 0]
     )
@@ -4548,9 +4546,7 @@ def _stream_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
         every=2,
     )
     name = "stream_frame_sample_gate"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _gate_shuffle_partitions(spark):
         q = (
             out.writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -4561,8 +4557,6 @@ def _stream_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError("stream-frame-sample: timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     n_batches = len(
         [p for p in q.recentProgress if p["numInputRows"] > 0]
     )
@@ -4622,9 +4616,7 @@ def _stream_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
         token_col="n_tokens", capacity=128,
     )
     name = "stream_pack_sequences_gate"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _gate_shuffle_partitions(spark):
         q = (
             out.writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -4635,8 +4627,6 @@ def _stream_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError("stream-pack-sequences: timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     n_batches = len(
         [p for p in q.recentProgress if p["numInputRows"] > 0]
     )
@@ -7237,499 +7227,345 @@ def _semantic_dedup_multi(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# New/changed registrations this round — always the head of queries().
-# tests/test_round6_ops.py::test_gate_head_composition derives the
-# expected gate-window composition from this constant + GATE_LEDGER.json
-# instead of pinning the 50-entry order verbatim (the r10 verdict
-# flagged the pinned r9 list as stale the moment the window rotated).
-GATE_NEW_THIS_ROUND = (
-    # CHANGED in r17 (optimization round 2 — NO new operators, per
-    # the optimization-round contract; these four entry bodies
-    # changed and must re-gate inside the window):
-    # ext-audit-report — the duplicated KMV-sketch and exact/ANN
-    # ranking subtrees now build once behind checkpoint seams
-    # (VERDICT r16 item 1).
-    "ext-audit-report",
-    # ext-contrastive-triplets — neighbor scoring through the Arrow
-    # numpy kernel (bit-equal, the BNLJ folds drop out; VERDICT r16
-    # item 5).
-    "ext-contrastive-triplets",
-    # the two KMV maintainer streams — shingle keys now derive
-    # INSIDE foreachBatch (kmv_sketch_stream prepare=), where the
-    # sized micro-batch lets the size-gated fan-out parallelize the
-    # per-key hashing; bit-identical sketch state.
-    "stream-distinct-intersect", "stream-source-overlap",
-)
-
 # Queries registered WITHOUT an oracle twin BY DESIGN (the driver
 # records the weaker rows-only check for them): the production-hash
 # CDC forms — xxhash64 is JVM-specific, which is exactly why the
 # hash-gated twins run the md5-derived portable_hash52 family
 # instead. Rows-only entries never earn a hash-green ledger record,
 # so they must LIVE inside the 50-entry gate window permanently
-# (gate_ledger.is_green documents this rule); the composition test
+# (gate_ledger.is_green documents this rule): gate_order() puts them
+# right behind the new/changed entries, and the composition test
 # enforces it.
 ROWS_ONLY_BY_DESIGN = (
     "ext-cdc-chunk-text-prod", "ext-cdc-chunk-clamped-prod",
 )
 
-# The r14 rotation: the oldest 25 of the 49 r9-record ledger
-# veterans (GATE_LEDGER.json green_round == 9 at round start),
-# alphabetical — the head of the r13-pinned R14 plan of record.
-# 23 new/changed + 2 rows-only + 25 veterans == exactly 50;
-# queries() ASSERTS head == plan at call time (the r12 verdict
-# item 1 rule), so this comment cannot overstate the window. The
-# remaining 24 r9 veterans move to R15_ROTATION_CANDIDATES and MUST
-# re-gate in r15 (freshness: no record older than 5 rounds behind
-# newest — r9 is exactly 5 behind after r14's snapshot lands).
-R14_ROTATION = (
-    "agg-distinct-users", "agg-percentiles", "agg-pricing-summary",
-    "agg-rollup-revenue", "agg-salted-sum", "agg-tumbling-window",
-    "ext-bpe-encode", "ext-cdc-chunk-clamped", "ext-decontaminate",
-    "ext-dedup-embedding", "ext-dedup-exact", "ext-dedup-keep-best",
-    "ext-dedup-lines", "ext-dedup-ngram-jaccard", "ext-dedup-simhash",
-    "ext-dedup-simhash-pairs", "ext-domain-cap",
-    "ext-embedding-whiten", "ext-fingerprint", "ext-layout-corpus",
-    "ext-mixture-allocate", "ext-mixture-expand", "ext-multimodal-png",
-    "ext-multimodal-wav", "ext-prepare-corpus",
-)
 
-# The r15 plan of record (written at r14 close): the window MUST
-# hold all 24 of these (the r9-cohort remainder — the freshness
-# invariant leaves no slack for them in r16) plus GATE_NEW_r15 +
-# the 2 rows-only residents; fill what remains with the head of the
-# 50-entry r10 cohort (GATE_LEDGER green_round == 10), alphabetical
-# — that cohort must finish re-gating by r16.
-R15_ROTATION_CANDIDATES = (
-    "ext-quality-repetition",
-    "ext-quality-score", "ext-sample-stratified",
-    "ext-semantic-decontaminate", "ext-sentence-decontaminate",
-    "ext-sentence-split", "ext-similarity-ann",
-    "ext-similarity-ivf", "ext-similarity-ivf-kmeans",
-    "ext-similarity-knn",
-    "ext-text-stats", "ext-tfidf-terms", "ext-token-count",
-    "ext-vocabulary", "id-assign-monotonic", "join-revenue-by-nation",
-    "join-semi-anti", "json-extract-props", "query-last-row",
-    "query-point-lookup", "set-ops-users", "sink-png-files",
-    "stream-sentence-decontaminate", "topk-customers",
-)
+def gate_fingerprint(fn, sql: str | None) -> str:
+    """The GATE_LEDGER.json fingerprint of one registry entry: sha256
+    of the entry function's source plus its oracle SQL. Code below the
+    entry function (the operator modules) is not captured; the local
+    full-registry parity test covers it."""
+    src = inspect.getsource(fn)
+    return hashlib.sha256(
+        (src + "\n--oracle--\n" + (sql or "")).encode()
+    ).hexdigest()
 
-# The r15 rotation: ALL 24 R15_ROTATION_CANDIDATES (the r9-cohort
-# remainder — exactly 5 rounds behind after the r14 snapshot, zero
-# freshness slack) plus the alphabetical head-10 of the 50-entry r10
-# ledger cohort. 14 new/changed + 2 rows-only + 34 == exactly 50;
-# queries() ASSERTS head == plan at call time. The remaining 40 r10
-# veterans are R16_ROTATION_CANDIDATES and MUST re-gate in r16
-# (freshness: r10 is exactly 5 rounds behind once the r15 snapshot
-# lands).
-R15_ROTATION = (
-    "ext-quality-repetition", "ext-quality-score", "ext-sample-stratified",
-    "ext-semantic-decontaminate", "ext-sentence-decontaminate",
-    "ext-sentence-split", "ext-similarity-ann", "ext-similarity-ivf",
-    "ext-similarity-ivf-kmeans", "ext-similarity-knn", "ext-text-stats",
-    "ext-tfidf-terms", "ext-token-count", "ext-vocabulary",
-    "id-assign-monotonic", "join-revenue-by-nation", "join-semi-anti",
-    "json-extract-props", "query-last-row", "query-point-lookup",
-    "set-ops-users", "sink-png-files", "stream-sentence-decontaminate",
-    "topk-customers", "agg-grouping-sets", "agg-moving-avg",
-    "agg-robust-mad", "agg-unpivot-melt", "decode-scalars-roundtrip",
-    "ext-ann-dim-recall", "ext-bm25-rank", "ext-cdc-compact",
-    "ext-corruption-spans", "ext-dedup-embedding-lsh",
-)
 
-# The r16 plan of record (written at r15 close, EXECUTED whole in
-# r16): the 40-entry r10-cohort remainder. HARD deadline (freshness
-# period = ceil(274/50) = 6): r10 records stay legal through an r16
-# snapshot (6 behind, exactly at the edge) and violate at r17 —
-# taking all 40 in r16 (GATE_NEW_r16 = 5 <= 8) keeps r17 fully free
-# for the r11 cohort.
-R16_ROTATION_CANDIDATES = (
-    "ext-dedup-ngram-containment",
-    "ext-denoise-pairs", "ext-embedding-pool",
-    "ext-fim-split", "ext-grouped-drift",
-    "ext-heavy-hitters-cms", "ext-importance-score", "ext-join-range",
-    "ext-lang-id", "ext-multimodal-audio", "ext-multimodal-decode",
-    "ext-multimodal-pipeline", "ext-ngram-novelty", "ext-pii-redact",
-    "ext-quality-gopher-rules", "ext-shard-assign", "ext-similarity-ivf-pq",
-    "ext-split-leakage-free", "ext-token-histogram", "ext-unigram-logprob",
-    "ext-url-curation", "kvs-frames-with-tags", "scan-ebml-heads",
-    "scan-ebml-tokenize", "sink-fanout-roundtrip", "sink-jsonl-roundtrip",
-    "sink-partitioned-prune", "source-csv-roundtrip",
-    "source-json-permissive", "source-kvs-replay", "source-orc-roundtrip",
-    "stream-asof-tags", "stream-cdc-compact", "stream-dedup-exact",
-    "stream-dedup-incremental", "stream-grouped-drift",
-    "stream-importance-score", "stream-segment-rollup", "stream-throttle",
-    "stream-tumbling-agg",
-)
+def gate_order(names, ledger: dict, fingerprints: dict[str, str],
+               rows_only) -> list[str]:
+    """Verification-priority order of the registry: entries with no
+    ledger record or whose fingerprint differs from it first (they
+    must gate), then the rows-only residents (they never earn a
+    record), then the rest by ascending ledger `green_round` (oldest
+    evidence re-gates first); name breaks every tie."""
+    rows_only = set(rows_only)
 
-# The r16 rotation: ALL 40 R16_ROTATION_CANDIDATES (the r10-cohort
-# remainder — zero freshness slack past this snapshot). The
-# rank-correlation wave took the window slots an r11 pull-forward
-# would have used (the r11 cohort has a full round of slack; new
-# entries have none). 8 new/changed + 2 rows-only + 40 == exactly
-# 50; queries() ASSERTS head == plan at call time.
-R16_ROTATION = R16_ROTATION_CANDIDATES
+    def key(q):
+        if q in rows_only:
+            return (1, 0, q)
+        rec = ledger.get(q)
+        if rec is None or rec["fingerprint"] != fingerprints[q]:
+            return (0, 0, q)
+        return (2, rec["green_round"], q)
 
-# The r17 plan of record (written at r16 close): the FULL 44-entry
-# r11 cohort. HARD deadline (freshness period = ceil(274/50) = 6):
-# r11 records stay legal through an r17 snapshot and violate at
-# r18 — take ALL 44 in r17 (GATE_NEW_r17 <= 4). The 42-entry r12
-# cohort comes due right behind at r18 (GATE_NEW_r18 <= 6), so keep
-# new-entry waves small through r18.
-R17_ROTATION_CANDIDATES = (
-    "agg-conversion-funnel", "agg-shipmode-priority", "agg-skyline-2d",
-    "agg-topn-per-group", "agg-window-ranks", "ext-ann-recall",
-    "ext-anomaly-zscore", "ext-bloom-prefilter", "ext-chunk-text",
-    "ext-collocations-pmi", "ext-curriculum-order", "ext-dedup-cluster",
-    "ext-dedup-keep-best-capped", "ext-distinct-hll",
-    "ext-embedding-quantize", "ext-fim-serialize",
-    "ext-histogram-quantile", "ext-knn-join", "ext-length-buckets",
-    "ext-normalize-text", "ext-pack-sequences", "ext-reservoir-sample",
-    "ext-scd2-versions", "ext-sequence-build", "ext-similarity-pq",
-    "ext-snapshot-diff", "ext-train-batch", "ext-ul2-pairs",
-    "ext-ul2-plan", "ext-zorder-layout", "join-large-orders",
-    "join-shipping-priority", "pivot-tag-assembly",
-    "scan-prune-elements", "segment-fragments", "sink-bucketed-join",
-    "source-parquet-evolve", "stream-domain-cap",
-    "stream-enrich-static", "stream-join-interval",
-    "stream-mixture-expand", "stream-restart-resume",
-    "stream-semantic-decontaminate", "stream-sliding-agg",
-)
-
-# The r17 rotation: ALL 44 R17_ROTATION_CANDIDATES, exactly as the
-# r16-close plan of record pinned it. 4 changed + 2 rows-only + 44
-# == exactly 50; queries() ASSERTS head == plan at call time. The
-# r18 plan of record: the 42-entry r12 cohort comes due (r12 records
-# are 6 behind once an r18 snapshot lands), so GATE_NEW_r18 <= 4 —
-# new-entry waves must stay small, exactly as r16's comment planned.
-R17_ROTATION = R17_ROTATION_CANDIDATES
+    return sorted(names, key=key)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDERING CONTRACT: the external correctness gate records only the
-    # FIRST 50 entries (observed every round since r2). So the dict is
-    # ordered by verification priority, rotated per round:
-    #   1. queries changed this round (r4: the 3 array-serialization
-    #      fixes — ERROR in r3, must re-gate),
-    #   2. queries NEW this round,
-    #   3. veterans whose latest green record is OLDEST (r4: the 42
-    #      entries last hash-gated in r2 — their records age out
-    #      otherwise),
-    #   4. remaining veterans (green in the newest snapshot).
-    # Every entry past position 50 must be hash-green in the union of
-    # CORRECTNESS_r*.json snapshots (per-query latest record wins) AND
-    # textually unchanged since — ASSERTED by tests/test_oracle_parity
-    # .py::test_gate_rotation_invariant against GATE_LEDGER.json
-    # (scripts/gate_ledger.py). tests/test_oracle_parity.py locally
-    # re-verifies ALL entries regardless of position.
-    out = {
-        # -- CHANGED in r17 (optimization round 2), re-gated (see
-        #    GATE_NEW_THIS_ROUND): the audit report (shared sketch/
-        #    ranking checkpoint seams), contrastive triplets (Arrow
-        #    neighbor-scoring kernel), and the two KMV maintainer
-        #    streams (keys now derive inside foreachBatch).
-        "ext-audit-report": _audit_report,
-        "ext-contrastive-triplets": _contrastive_triplets,
-        "stream-distinct-intersect": _stream_distinct_intersect,
-        "stream-source-overlap": _stream_source_overlap,
-        # -- rows-only BY DESIGN (xxhash64 has no SQL twin): must
-        #    live inside the window permanently so their weaker
-        #    rows-only check is refreshed every round.
-        "ext-cdc-chunk-text-prod": _cdc_chunk_text_prod,
-        "ext-cdc-chunk-clamped-prod": _cdc_chunk_clamped_prod,
-        # -- the r17 rotation (R17_ROTATION): the FULL 44-entry r11
-        #    cohort (r11 records are exactly at the freshness edge
-        #    after this snapshot). 4 changed + 2 rows-only + 44 ==
-        #    exactly 50; queries() asserts head == plan at call time.
+    # FIRST 50 entries, so the registry is returned in gate_order() over
+    # GATE_LEDGER.json (scripts/gate_ledger.py folds each snapshot into
+    # it). An entry whose source or oracle changed since its green
+    # record moves into the window by itself. Every entry past position
+    # 50 must be hash-green in the ledger and unchanged since, asserted
+    # by tests/test_oracle_parity.py::test_gate_rotation_invariant;
+    # tests/test_oracle_parity.py re-verifies ALL entries locally.
+    registry = {
         "agg-conversion-funnel": _funnel,
+        "agg-distinct-users": _distinct_users,
+        "agg-forecast-revenue": _forecast_revenue,
+        "agg-grouping-sets": _grouping_sets,
+        "agg-moving-avg": _moving_avg,
+        "agg-percentiles": _percentiles,
+        "agg-pricing-summary": _pricing_summary,
+        "agg-retention-cohorts": _cohorts,
+        "agg-robust-mad": _robust_mad,
+        "agg-rollup-revenue": _rollup_revenue,
+        "agg-salted-sum": _salted_sum,
         "agg-shipmode-priority": _shipmode_priority,
         "agg-skyline-2d": _skyline,
         "agg-topn-per-group": _topn_per_group,
+        "agg-tumbling-window": _tumbling_window,
+        "agg-unpivot-melt": _melt,
         "agg-window-ranks": _window_ranks,
+        "decode-scalars-roundtrip": _decode_roundtrip,
+        "demux-decode-explode": _explode,
+        "enqueue-bounded-retention": _retention,
+        "error-route": _error_route,
+        "ext-ann-dim-recall": _ann_dim_recall,
         "ext-ann-recall": _ann_recall,
         "ext-anomaly-zscore": _zscore,
+        "ext-audio-resample": _audio_resample,
+        "ext-audit-report": _audit_report,
         "ext-bloom-prefilter": _bloom_prefilter,
+        "ext-bm25-rank": _bm25,
+        "ext-bootstrap-ci": _bootstrap_ci,
+        "ext-bootstrap-ci-grouped": _bootstrap_ci_grouped,
+        "ext-bpe-encode": _bpe_encode,
+        "ext-bpe-train": _bpe_train,
+        "ext-budget-select": _budget_select,
+        "ext-cdc-chunk-clamped": _cdc_chunk_clamped,
+        "ext-cdc-chunk-clamped-prod": _cdc_chunk_clamped_prod,
+        "ext-cdc-chunk-text": _cdc_chunk_text,
+        "ext-cdc-chunk-text-prod": _cdc_chunk_text_prod,
+        "ext-cdc-compact": _cdc_compact,
+        "ext-chao1-vocab": _chao1_vocab,
         "ext-chunk-text": _chunk_text,
+        "ext-cms-topk-exact": _cms_topk_exact,
         "ext-collocations-pmi": _collocations,
+        "ext-compact-files": _compact_files,
+        "ext-contrastive-by-cell": _contrastive_by_cell,
+        "ext-contrastive-triplets": _contrastive_triplets,
+        "ext-corpus-drift": _corpus_drift,
+        "ext-corruption-spans": _corruption_spans,
+        "ext-curate-corpus": _curate_corpus,
         "ext-curriculum-order": _curriculum_order,
+        "ext-dataset-card": _dataset_card,
+        "ext-decontaminate": _decontaminate,
         "ext-dedup-cluster": _dedup_cluster,
+        "ext-dedup-embedding": _embedding_dedup,
+        "ext-dedup-embedding-lsh": _embedding_dedup_lsh,
+        "ext-dedup-exact": _dedup_exact,
+        "ext-dedup-incremental": _dedup_incremental,
+        "ext-dedup-keep-best": _dedup_keep_best,
         "ext-dedup-keep-best-capped": _dedup_keep_best_capped,
-        "ext-distinct-hll": _distinct_hll,
-        "ext-embedding-quantize": _embedding_quantize,
-        "ext-fim-serialize": _fim_serialize,
-        "ext-histogram-quantile": _hist_quantiles,
-        "ext-knn-join": _knn_join,
-        "ext-length-buckets": _equidepth_buckets,
-        "ext-normalize-text": _normalize_text,
-        "ext-pack-sequences": _pack_sequences,
-        "ext-reservoir-sample": _reservoir,
-        "ext-scd2-versions": _scd2,
-        "ext-sequence-build": _sequence_build,
-        "ext-similarity-pq": _ann_pq,
-        "ext-snapshot-diff": _snapshot_diff,
-        "ext-train-batch": _train_batch,
-        "ext-ul2-pairs": _ul2_pairs,
-        "ext-ul2-plan": _ul2_plan,
-        "ext-zorder-layout": _zorder_layout,
-        "join-large-orders": _large_orders,
-        "join-shipping-priority": _shipping_priority,
-        "pivot-tag-assembly": _pivot_tags,
-        "scan-prune-elements": _scan_prune,
-        "segment-fragments": _segment,
-        "sink-bucketed-join": _bucketed_join_gate,
-        "source-parquet-evolve": _parquet_evolve,
-        "stream-domain-cap": _stream_domain_cap,
-        "stream-enrich-static": _stream_enrich,
-        "stream-join-interval": _stream_interval_join,
-        "stream-mixture-expand": _stream_mixture_expand,
-        "stream-restart-resume": _stream_restart_resume,
-        "stream-semantic-decontaminate": _stream_semantic_decontaminate,
-        "stream-sliding-agg": _stream_sliding,
-        # ---- gate horizon (position 50): entries below are past
-        # the external gate's 50-entry window this round; all are
-        # green in the union of CORRECTNESS_r*.json with fingerprints
-        # in GATE_LEDGER.json, textually unchanged since (asserted by
-        # tests/test_oracle_parity.py::test_gate_rotation_invariant).
-        # -- r16 ledger records:
-        "ext-eval-pr-auc": _eval_pr_auc,
-        "stream-eval-pr-auc": _stream_eval_pr_auc,
-        "ext-eval-pr-auc-grouped": _eval_pr_auc_grouped,
-        "ext-eval-calibration-drift": _eval_calibration_drift,
-        "ext-eval-rankcorr": _eval_rankcorr,
-        "stream-eval-rankcorr": _stream_eval_rankcorr,
-        "ext-eval-rankcorr-grouped": _eval_rankcorr_grouped,
+        "ext-dedup-lines": _dedup_lines,
+        "ext-dedup-minhash": _dedup_minhash,
         "ext-dedup-ngram-containment": _ngram_containment,
+        "ext-dedup-ngram-jaccard": _ngram_jaccard,
+        "ext-dedup-recall": _dedup_recall,
+        "ext-dedup-reweight": _dedup_reweight,
+        "ext-dedup-semantic": _semantic_dedup,
+        "ext-dedup-semantic-keep-best": _semantic_keep_best,
+        "ext-dedup-semantic-multi": _semantic_dedup_multi,
+        "ext-dedup-semantic-recall": _semantic_dedup_recall,
+        "ext-dedup-semantic-table": _semantic_dedup_table,
+        "ext-dedup-semantic-vec": _semantic_dedup_vec,
+        "ext-dedup-simhash": _simhash,
+        "ext-dedup-simhash-pairs": _dedup_simhash_pairs,
+        "ext-dedup-span-removal": _dedup_span_removal,
         "ext-denoise-pairs": _denoise_pairs,
+        "ext-distinct-hll": _distinct_hll,
+        "ext-distinct-intersect": _distinct_intersect,
+        "ext-domain-cap": _domain_cap,
+        "ext-domain-cap-topk": _domain_cap_topk,
+        "ext-dup-spans": _dup_spans,
+        "ext-embedding-dim-stats": _embedding_dim_stats,
         "ext-embedding-pool": _embedding_pool,
+        "ext-embedding-quantize": _embedding_quantize,
+        "ext-embedding-whiten": _embedding_whiten,
+        "ext-eval-auc": _eval_auc,
+        "ext-eval-auc-grouped": _eval_auc_grouped,
+        "ext-eval-brier": _eval_brier,
+        "ext-eval-brier-grouped": _eval_brier_grouped,
+        "ext-eval-calibration-drift": _eval_calibration_drift,
+        "ext-eval-confusion": _eval_confusion,
+        "ext-eval-ece": _eval_ece,
+        "ext-eval-ece-grouped": _eval_ece_grouped,
+        "ext-eval-mcc": _eval_mcc,
+        "ext-eval-pr-auc": _eval_pr_auc,
+        "ext-eval-pr-auc-grouped": _eval_pr_auc_grouped,
+        "ext-eval-rankcorr": _eval_rankcorr,
+        "ext-eval-rankcorr-grouped": _eval_rankcorr_grouped,
+        "ext-eval-reliability": _eval_reliability,
+        "ext-fim-serialize": _fim_serialize,
         "ext-fim-split": _fim_split,
+        "ext-fingerprint": _fingerprint,
+        "ext-fleiss-kappa": _fleiss_kappa,
+        "ext-frame-sample": _frame_sample,
         "ext-grouped-drift": _grouped_drift,
         "ext-heavy-hitters-cms": _cms_heavy_hitters,
+        "ext-histogram-quantile": _hist_quantiles,
+        "ext-hll-merge": _hll_merge,
+        "ext-html-strip": _html_strip,
         "ext-importance-score": _importance_score,
+        "ext-interleave-mixture": _interleave_mixture,
         "ext-join-range": _range_join,
+        "ext-kmv-merge": _kmv_merge,
+        "ext-knn-join": _knn_join,
+        "ext-knn-join-vec": _knn_join_vec,
+        "ext-krippendorff-alpha": _krippendorff_alpha,
+        "ext-ks-drift": _ks_drift,
+        "ext-ks-matrix": _ks_matrix,
         "ext-lang-id": _lang_id,
+        "ext-layout-corpus": _layout_corpus,
+        "ext-length-buckets": _equidepth_buckets,
+        "ext-minhash-overlap": _minhash_overlap,
+        "ext-minhash-shard-merge": _minhash_shard_merge,
+        "ext-mixture-allocate": _mixture_allocate,
+        "ext-mixture-expand": _mixture_expand,
+        "ext-mixture-temperature": _mixture_temperature,
         "ext-multimodal-audio": _multimodal_audio,
         "ext-multimodal-decode": _multimodal,
         "ext-multimodal-pipeline": _multimodal_pipeline,
+        "ext-multimodal-png": _multimodal_png,
+        "ext-multimodal-wav": _multimodal_wav,
         "ext-ngram-novelty": _ngram_novelty,
+        "ext-normalize-text": _normalize_text,
+        "ext-pack-nofragment": _pack_nofragment,
+        "ext-pack-sequences": _pack_sequences,
+        "ext-pagerank-dups": _pagerank_dups,
+        "ext-perplexity-bigram": _perplexity_bigram,
         "ext-pii-redact": _pii_redact,
+        "ext-prepare-corpus": _prepare_corpus,
+        "ext-psi-drift": _psi_drift,
+        "ext-quality-blend": _quality_blend,
         "ext-quality-gopher-rules": _gopher_rules,
+        "ext-quality-percentile": _quality_percentile,
+        "ext-quality-percentile-frozen": _quality_percentile_frozen,
+        "ext-quality-repetition": _repetition,
+        "ext-quality-score": _quality,
+        "ext-rank-fusion": _rank_fusion_q,
+        "ext-rank-overlap": _rank_overlap,
+        "ext-rater-kappa": _rater_kappa,
+        "ext-readability": _readability,
+        "ext-reservoir-sample": _reservoir,
+        "ext-retrieval-metrics": _retrieval_metrics,
+        "ext-sample-stratified": _sample_stratified,
+        "ext-sample-weighted": _sample_weighted,
+        "ext-scd2-asof": _scd2_asof,
+        "ext-scd2-versions": _scd2,
+        "ext-semantic-decontaminate": _semantic_decontaminate,
+        "ext-sentence-decontaminate": _sentence_decontaminate,
+        "ext-sentence-split": _sentence_split,
+        "ext-sequence-build": _sequence_build,
         "ext-shard-assign": _shard_assign,
+        "ext-shuffle-order": _shuffle_order,
+        "ext-simhash-cap-audit": _simhash_cap_audit,
+        "ext-similarity-ann": _ann_lsh,
+        "ext-similarity-ivf": _ann_ivf,
+        "ext-similarity-ivf-kmeans": _ann_ivf_kmeans,
+        "ext-similarity-ivf-kmeans-table": _ann_ivf_kmeans_table,
         "ext-similarity-ivf-pq": _ann_ivf_pq,
+        "ext-similarity-ivf-pq-table": _ann_ivf_pq_table,
+        "ext-similarity-ivf-table": _ann_ivf_table,
+        "ext-similarity-knn": _knn,
+        "ext-similarity-pq": _ann_pq,
+        "ext-snapshot-diff": _snapshot_diff,
+        "ext-source-overlap": _source_overlap,
         "ext-split-leakage-free": _split_leakage_free,
+        "ext-text-stats": _text_stats,
+        "ext-tfidf-terms": _tfidf_terms,
+        "ext-token-count": _token_count,
         "ext-token-histogram": _token_histogram,
+        "ext-tokenize-pack": _tokenize_pack,
+        "ext-tokenizer-fertility": _tokenizer_fertility,
+        "ext-train-batch": _train_batch,
+        "ext-ul2-pairs": _ul2_pairs,
+        "ext-ul2-plan": _ul2_plan,
         "ext-unigram-logprob": _unigram_logprob,
         "ext-url-curation": _url_curation,
+        "ext-validate-expectations": _validate_expectations,
+        "ext-vocab-coverage": _vocab_coverage,
+        "ext-vocabulary": _vocabulary,
+        "ext-winsorize": _winsorize,
+        "ext-word-entropy": _word_entropy,
+        "ext-zorder-layout": _zorder_layout,
+        "id-assign-monotonic": _mono_id,
+        "join-above-nation-avg": _above_nation_avg,
+        "join-asof-backward": _asof_backward,
+        "join-asof-nearest": _asof_nearest,
+        "join-asof-tags": _asof,
+        "join-full-outer-activity": _full_outer_activity,
+        "join-large-orders": _large_orders,
+        "join-late-orders-exists": _late_orders_exists,
+        "join-revenue-by-nation": _revenue_by_nation,
+        "join-salted-skew": _salted_join,
+        "join-semi-anti": _semi_anti,
+        "join-shipping-priority": _shipping_priority,
+        "join-top-supplier": _top_supplier,
+        "json-extract-props": _props_json,
         "kvs-frames-with-tags": _kvs_pipeline,
+        "pivot-tag-assembly": _pivot_tags,
+        "query-last-row": _last,
+        "query-point-lookup": _point,
+        "sample-throttle-time": _throttle,
         "scan-ebml-heads": _ebml_heads,
         "scan-ebml-tokenize": _ebml_tokenize,
+        "scan-element-callback": _scan_element_callback,
+        "scan-prune-elements": _scan_prune,
+        "segment-fragments": _segment,
+        "segment-sessions-gap": _sessions_gap,
+        "set-ops-users": _set_ops,
+        "sink-bucketed-join": _bucketed_join_gate,
         "sink-fanout-roundtrip": _fanout_roundtrip,
         "sink-jsonl-roundtrip": _jsonl_roundtrip,
+        "sink-manifest-commit": _manifest_sink_roundtrip,
+        "sink-memory-bounded": _sink_memory_bounded,
         "sink-partitioned-prune": _partitioned_prune,
+        "sink-png-files": _sink_png_files,
         "source-csv-roundtrip": _csv_roundtrip,
         "source-json-permissive": _json_permissive,
         "source-kvs-replay": _kvs_replay_source,
         "source-orc-roundtrip": _orc_roundtrip,
+        "source-parquet-evolve": _parquet_evolve,
         "stream-asof-tags": _stream_asof,
+        "stream-backpressure-multibatch": _stream_backpressure,
+        "stream-bootstrap-ci": _stream_bootstrap_ci,
         "stream-cdc-compact": _stream_cdc,
+        "stream-chao1-vocab": _stream_chao1_vocab,
+        "stream-corpus-drift": _stream_corpus_drift,
         "stream-dedup-exact": _stream_dedup,
         "stream-dedup-incremental": _stream_dedup_incremental,
-        "stream-grouped-drift": _stream_grouped_drift,
-        "stream-importance-score": _stream_importance_score,
-        "stream-segment-rollup": _stream_segment,
-        "stream-throttle": _stream_throttle,
-        "stream-tumbling-agg": _stream_tumbling,
-        # -- r15 ledger records:
-        "ext-dataset-card": _dataset_card,
-        "ext-eval-ece-grouped": _eval_ece_grouped,
-        "ext-eval-brier-grouped": _eval_brier_grouped,
-        "stream-eval-ece": _stream_eval_ece,
-        "stream-eval-brier": _stream_eval_brier,
-        "ext-quality-percentile-frozen": _quality_percentile_frozen,
-        "stream-quality-percentile": _stream_quality_percentile,
-        "ext-cms-topk-exact": _cms_topk_exact,
-        "ext-eval-reliability": _eval_reliability,
-        "ext-eval-mcc": _eval_mcc,
-        "ext-eval-auc": _eval_auc,
+        "stream-dedup-semantic": _stream_dedup_semantic,
+        "stream-distinct-intersect": _stream_distinct_intersect,
+        "stream-domain-cap": _stream_domain_cap,
+        "stream-enrich-static": _stream_enrich,
         "stream-eval-auc": _stream_eval_auc,
-        "ext-eval-auc-grouped": _eval_auc_grouped,
-        "ext-quality-repetition": _repetition,
-        "ext-quality-score": _quality,
-        "ext-sample-stratified": _sample_stratified,
-        "ext-semantic-decontaminate": _semantic_decontaminate,
-        "ext-sentence-decontaminate": _sentence_decontaminate,
-        "ext-sentence-split": _sentence_split,
-        "ext-similarity-ann": _ann_lsh,
-        "ext-similarity-ivf": _ann_ivf,
-        "ext-similarity-ivf-kmeans": _ann_ivf_kmeans,
-        "ext-similarity-knn": _knn,
-        "ext-text-stats": _text_stats,
-        "ext-tfidf-terms": _tfidf_terms,
-        "ext-token-count": _token_count,
-        "ext-vocabulary": _vocabulary,
-        "id-assign-monotonic": _mono_id,
-        "join-revenue-by-nation": _revenue_by_nation,
-        "join-semi-anti": _semi_anti,
-        "json-extract-props": _props_json,
-        "query-last-row": _last,
-        "query-point-lookup": _point,
-        "set-ops-users": _set_ops,
-        "sink-png-files": _sink_png_files,
-        "stream-sentence-decontaminate": _stream_sentence_decontaminate,
-        "topk-customers": _topk_customers,
-        "agg-grouping-sets": _grouping_sets,
-        "agg-moving-avg": _moving_avg,
-        "agg-robust-mad": _robust_mad,
-        "agg-unpivot-melt": _melt,
-        "decode-scalars-roundtrip": _decode_roundtrip,
-        "ext-ann-dim-recall": _ann_dim_recall,
-        "ext-bm25-rank": _bm25,
-        "ext-cdc-compact": _cdc_compact,
-        "ext-corruption-spans": _corruption_spans,
-        "ext-dedup-embedding-lsh": _embedding_dedup_lsh,
-        # -- r14 ledger records:
-        "ext-dedup-semantic-recall": _semantic_dedup_recall,
-        "ext-distinct-intersect": _distinct_intersect,
-        "ext-source-overlap": _source_overlap,
-        "ext-minhash-overlap": _minhash_overlap,
-        "ext-bootstrap-ci-grouped": _bootstrap_ci_grouped,
-        "ext-eval-confusion": _eval_confusion,
+        "stream-eval-brier": _stream_eval_brier,
         "stream-eval-confusion": _stream_eval_confusion,
-        "ext-chao1-vocab": _chao1_vocab,
-        "ext-ks-matrix": _ks_matrix,
-        "ext-psi-drift": _psi_drift,
-        "ext-krippendorff-alpha": _krippendorff_alpha,
-        "ext-quality-percentile": _quality_percentile,
-        "stream-psi-drift": _stream_psi_drift,
-        "stream-ks-drift": _stream_ks_drift,
-        "stream-chao1-vocab": _stream_chao1_vocab,
-        "stream-bootstrap-ci": _stream_bootstrap_ci,
-        "stream-rater-kappa": _stream_rater_kappa,
-        "ext-dedup-reweight": _dedup_reweight,
-        "ext-eval-ece": _eval_ece,
-        "ext-eval-brier": _eval_brier,
-        "agg-distinct-users": _distinct_users,
-        "agg-percentiles": _percentiles,
-        "agg-pricing-summary": _pricing_summary,
-        "agg-rollup-revenue": _rollup_revenue,
-        "agg-salted-sum": _salted_sum,
-        "agg-tumbling-window": _tumbling_window,
-        "ext-bpe-encode": _bpe_encode,
-        "ext-cdc-chunk-clamped": _cdc_chunk_clamped,
-        "ext-decontaminate": _decontaminate,
-        "ext-dedup-embedding": _embedding_dedup,
-        "ext-dedup-exact": _dedup_exact,
-        "ext-dedup-keep-best": _dedup_keep_best,
-        "ext-dedup-lines": _dedup_lines,
-        "ext-dedup-ngram-jaccard": _ngram_jaccard,
-        "ext-dedup-simhash": _simhash,
-        "ext-dedup-simhash-pairs": _dedup_simhash_pairs,
-        "ext-domain-cap": _domain_cap,
-        "ext-embedding-whiten": _embedding_whiten,
-        "ext-fingerprint": _fingerprint,
-        "ext-layout-corpus": _layout_corpus,
-        "ext-mixture-allocate": _mixture_allocate,
-        "ext-mixture-expand": _mixture_expand,
-        "ext-multimodal-png": _multimodal_png,
-        "ext-multimodal-wav": _multimodal_wav,
-        "ext-prepare-corpus": _prepare_corpus,
-        # -- r13 ledger records:
-        "ext-dedup-semantic-multi": _semantic_dedup_multi,
+        "stream-eval-ece": _stream_eval_ece,
+        "stream-eval-pr-auc": _stream_eval_pr_auc,
+        "stream-eval-rankcorr": _stream_eval_rankcorr,
+        "stream-frame-sample": _stream_frame_sample,
+        "stream-grouped-drift": _stream_grouped_drift,
         "stream-heavy-hitters": _stream_heavy_hitters,
         "stream-histogram-quantile": _stream_hist_quantiles,
-        "ext-rater-kappa": _rater_kappa,
-        "ext-fleiss-kappa": _fleiss_kappa,
-        "ext-bootstrap-ci": _bootstrap_ci,
-        "ext-ks-drift": _ks_drift,
-        "ext-minhash-shard-merge": _minhash_shard_merge,
-        "ext-readability": _readability,
-        "stream-dedup-semantic": _stream_dedup_semantic,
-        "ext-dedup-incremental": _dedup_incremental,
-        "ext-dedup-recall": _dedup_recall,
-        "ext-dedup-span-removal": _dedup_span_removal,
-        "ext-domain-cap-topk": _domain_cap_topk,
-        "ext-dup-spans": _dup_spans,
-        "ext-frame-sample": _frame_sample,
-        "ext-html-strip": _html_strip,
-        "ext-interleave-mixture": _interleave_mixture,
-        "ext-pack-nofragment": _pack_nofragment,
-        "ext-pagerank-dups": _pagerank_dups,
-        "ext-perplexity-bigram": _perplexity_bigram,
-        "ext-quality-blend": _quality_blend,
-        "ext-rank-fusion": _rank_fusion_q,
-        "ext-scd2-asof": _scd2_asof,
-        "ext-shuffle-order": _shuffle_order,
-        "ext-tokenize-pack": _tokenize_pack,
-        "ext-tokenizer-fertility": _tokenizer_fertility,
-        "ext-validate-expectations": _validate_expectations,
-        "ext-vocab-coverage": _vocab_coverage,
-        "ext-winsorize": _winsorize,
-        "ext-word-entropy": _word_entropy,
-        "join-asof-backward": _asof_backward,
-        "join-asof-nearest": _asof_nearest,
-        "join-asof-tags": _asof,
-        "sample-throttle-time": _throttle,
-        "scan-element-callback": _scan_element_callback,
-        "sink-manifest-commit": _manifest_sink_roundtrip,
-        "sink-memory-bounded": _sink_memory_bounded,
-        "stream-corpus-drift": _stream_corpus_drift,
-        "stream-frame-sample": _stream_frame_sample,
-        "stream-manifest-sink": _stream_manifest_sink,
-        "stream-pause-resume": _stream_pause_resume,
-        "stream-quality-blend": _stream_quality_blend,
-        "stream-vocab-coverage": _stream_vocab_coverage,
-        # -- r12 ledger records:
-        "ext-dedup-semantic-table": _semantic_dedup_table,
-        "ext-dedup-semantic-vec": _semantic_dedup_vec,
-        "ext-knn-join-vec": _knn_join_vec,
-        "ext-contrastive-by-cell": _contrastive_by_cell,
-        "ext-simhash-cap-audit": _simhash_cap_audit,
-        "ext-dedup-semantic-keep-best": _semantic_keep_best,
-        "ext-similarity-ivf-kmeans-table": _ann_ivf_kmeans_table,
-        "ext-similarity-ivf-table": _ann_ivf_table,
-        "ext-similarity-ivf-pq-table": _ann_ivf_pq_table,
-        "ext-kmv-merge": _kmv_merge,
-        "ext-retrieval-metrics": _retrieval_metrics,
-        "ext-rank-overlap": _rank_overlap,
-        "ext-budget-select": _budget_select,
-        "stream-token-quota": _stream_token_quota,
-        "ext-dedup-semantic": _semantic_dedup,
-        "stream-pack-sequences": _stream_pack_sequences,
-        "agg-retention-cohorts": _cohorts,
-        "stream-scd2": _stream_scd2,
-        "ext-hll-merge": _hll_merge,
-        "join-top-supplier": _top_supplier,
-        "join-above-nation-avg": _above_nation_avg,
         "stream-hll-distinct": _stream_hll,
-        "ext-sample-weighted": _sample_weighted,
-        "ext-embedding-dim-stats": _embedding_dim_stats,
-        "ext-mixture-temperature": _mixture_temperature,
-        "stream-backpressure-multibatch": _stream_backpressure,
-        "join-full-outer-activity": _full_outer_activity,
-        "agg-forecast-revenue": _forecast_revenue,
-        "join-late-orders-exists": _late_orders_exists,
-        "ext-dedup-minhash": _dedup_minhash,
-        "join-salted-skew": _salted_join,
-        "segment-sessions-gap": _sessions_gap,
-        "demux-decode-explode": _explode,
-        "enqueue-bounded-retention": _retention,
-        "error-route": _error_route,
-        "ext-audio-resample": _audio_resample,
-        "ext-bpe-train": _bpe_train,
-        "ext-cdc-chunk-text": _cdc_chunk_text,
-        "ext-compact-files": _compact_files,
-        "ext-corpus-drift": _corpus_drift,
-        "ext-curate-corpus": _curate_corpus,
+        "stream-importance-score": _stream_importance_score,
+        "stream-join-interval": _stream_interval_join,
+        "stream-ks-drift": _stream_ks_drift,
+        "stream-manifest-sink": _stream_manifest_sink,
+        "stream-mixture-expand": _stream_mixture_expand,
+        "stream-pack-sequences": _stream_pack_sequences,
+        "stream-pause-resume": _stream_pause_resume,
+        "stream-psi-drift": _stream_psi_drift,
+        "stream-quality-blend": _stream_quality_blend,
+        "stream-quality-percentile": _stream_quality_percentile,
+        "stream-rater-kappa": _stream_rater_kappa,
+        "stream-restart-resume": _stream_restart_resume,
+        "stream-scd2": _stream_scd2,
+        "stream-segment-rollup": _stream_segment,
+        "stream-semantic-decontaminate": _stream_semantic_decontaminate,
+        "stream-sentence-decontaminate": _stream_sentence_decontaminate,
+        "stream-sliding-agg": _stream_sliding,
+        "stream-source-overlap": _stream_source_overlap,
+        "stream-throttle": _stream_throttle,
+        "stream-token-quota": _stream_token_quota,
+        "stream-tumbling-agg": _stream_tumbling,
+        "stream-vocab-coverage": _stream_vocab_coverage,
+        "topk-customers": _topk_customers,
     }
-    # Composed-at-call window assertion (r12 verdict item 1): the
-    # documented rotation plan IS the gate window, exactly.
-    plan = (*GATE_NEW_THIS_ROUND, *ROWS_ONLY_BY_DESIGN, *R17_ROTATION)
-    assert len(plan) == 50, f"window plan is {len(plan)} entries, not 50"
-    head = list(out)[:50]
-    assert head == list(plan), (
-        "gate-window head drifted from the documented plan: "
-        f"{[q for q, p in zip(head, plan) if q != p][:5]}"
-    )
-    return out
+    osql = oracle_sql()
+    fps = {
+        q: gate_fingerprint(fn, osql.get(q)) for q, fn in registry.items()
+    }
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "GATE_LEDGER.json")) as f:
+        ledger = json.load(f)
+    order = gate_order(registry, ledger, fps, ROWS_ONLY_BY_DESIGN)
+    return {q: registry[q] for q in order}
 
 
 # --------------------------------------------------------------------------

@@ -49,8 +49,12 @@ def _safe_div(num, denom):
     return F.when(denom > 0, num / denom)
 
 
-# 4 MiB (the default size gate) of 64-dim float64 rows: 8192 rows, a
-# 512 MiB dense score matrix if they all land in one cell.
+# Plan-estimated input size under which auto may pick the per-cell
+# kernel even with no cell_cap: 4 MiB ~ 8k rows of 64-dim float64.
+_AUTO_KERNEL_BYTES = 4 * 1024 * 1024
+
+# _AUTO_KERNEL_BYTES of 64-dim float64 rows: 8192 rows, a 512 MiB
+# dense score matrix if they all land in one cell.
 _MAX_KERNEL_CELL = 8192
 
 
@@ -80,10 +84,10 @@ def _resolve_vectorized(df: DataFrame, id_col: str,
       larger cap proves nothing and falls through to that gate, or
     * the plan-estimated size of the WHOLE input is small enough
       that even the degenerate all-rows-in-one-cell case fits a
-      task comfortably ($SPARK_GRAFT_SEMDEDUP_AUTO_BYTES, default
-      4 MiB ~ 8k rows of 64-dim float64 ~ a 512 MB worst-case
-      matrix; the fan_out_small size-gate pattern). Streaming or
-      unsized plans never auto-vectorize.
+      task comfortably (`_AUTO_KERNEL_BYTES`, 4 MiB ~ 8k rows of
+      64-dim float64 ~ a 512 MB worst-case matrix; the fan_out_small
+      size-gate pattern). Streaming or unsized plans never
+      auto-vectorize.
 
     Past both gates a skewed/giant cell that the streamed HOF
     cell-join would have handled could OOM an executor, so the user
@@ -98,14 +102,7 @@ def _resolve_vectorized(df: DataFrame, id_col: str,
         return False
     if cell_cap is not None and cell_cap <= _MAX_KERNEL_CELL:
         return True
-    import os
-
-    try:
-        cap = int(os.environ.get(
-            "SPARK_GRAFT_SEMDEDUP_AUTO_BYTES", 4 * 1024 * 1024))
-    except ValueError:
-        cap = 4 * 1024 * 1024
-    if cap <= 0 or df.isStreaming:
+    if df.isStreaming:
         return False
     try:
         size = int(
@@ -113,7 +110,7 @@ def _resolve_vectorized(df: DataFrame, id_col: str,
                 .sizeInBytes()))
     except Exception:  # unsized/foreign plan: keep the streamed HOF
         return False
-    return size <= cap
+    return size <= _AUTO_KERNEL_BYTES
 
 
 def cosine_scores(

@@ -107,6 +107,10 @@ def salted_join(
     return salted_facts.join(rep, [key, "_salt"], how).drop("_salt")
 
 
+# fan_out_small's default size gate per task.
+_FANOUT_TASK_BYTES = 4 * 1024 * 1024
+
+
 def fan_out_small(
     df: DataFrame, *, bytes_per_task: int | None = None
 ) -> DataFrame:
@@ -127,24 +131,14 @@ def fan_out_small(
     threshold derives from the actual core count and actual input
     size wherever it runs.
 
-    `bytes_per_task` defaults to $SPARK_GRAFT_FANOUT_TASK_BYTES or
-    4 MiB; pass 0 to disable. Streaming DataFrames and plans without
-    a size estimate are returned unchanged. Callers must be
+    `bytes_per_task` defaults to `_FANOUT_TASK_BYTES` (4 MiB); pass 0
+    to disable. Streaming DataFrames and plans without a size
+    estimate are returned unchanged. Callers must be
     partition-layout-independent (per-row outputs, integer/keyed
     aggregation) — every in-repo caller is; do NOT use upstream of
     monotonically_increasing_id or float cross-row folds."""
-    import os
-
     if bytes_per_task is None:
-        try:
-            bytes_per_task = int(
-                os.environ.get(
-                    "SPARK_GRAFT_FANOUT_TASK_BYTES", 4 * 1024 * 1024)
-            )
-        except ValueError:  # malformed override: keep the default
-            # (r16 ADVICE: a bad env value must not raise at
-            # plan-build time inside every caller)
-            bytes_per_task = 4 * 1024 * 1024
+        bytes_per_task = _FANOUT_TASK_BYTES
     if bytes_per_task <= 0 or df.isStreaming:
         return df
     try:

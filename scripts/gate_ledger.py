@@ -10,15 +10,18 @@ and maintains `GATE_LEDGER.json`:
 
     {query: {"green_round": N, "fingerprint": sha256-hex}}
 
-`fingerprint` hashes the query callable's source (via
-`inspect.getsource`) concatenated with its oracle SQL — recorded when
-the query's green record lands. If the entry function or its oracle
-changes afterwards, the fingerprint goes stale and
-`tests/test_oracle_parity.py::test_gate_rotation_invariant` fails
-until the query is reordered inside the gate window and re-gated.
-(Operator-module changes below the entry function are NOT captured by
-the fingerprint; they are covered by the local full-registry parity
-test, which runs every entry regardless of position.)
+The fingerprint is `__spark_entry__.gate_fingerprint`: the query
+callable's source (via `inspect.getsource`) concatenated with its
+oracle SQL, recorded when the query's green record lands. The window
+follows the ledger by itself: `queries()` returns the registry in
+`__spark_entry__.gate_order`, so an entry whose function or oracle
+changed since its record (a stale fingerprint) or that has no record
+yet heads the window, followed by the rows-only residents and then
+the oldest records. (Operator-module changes below the entry function
+are NOT captured by the fingerprint; they are covered by the local
+full-registry parity test, which runs every entry regardless of
+position.) `tests/test_oracle_parity.py::test_gate_rotation_invariant`
+fails only if more entries must gate than the window holds.
 
 Usage (run at round start, after the driver writes a new snapshot):
 
@@ -26,13 +29,12 @@ Usage (run at round start, after the driver writes a new snapshot):
     python scripts/gate_ledger.py --check  # READ-ONLY: report
                                            # staleness, rc!=0 if any;
                                            # never writes the ledger
+    python scripts/gate_ledger.py --table  # window summary for README
 """
 
 from __future__ import annotations
 
 import glob
-import hashlib
-import inspect
 import json
 import os
 import re
@@ -76,20 +78,14 @@ def green_rounds() -> dict[str, int]:
     }
 
 
-def fingerprint(fn, sql: str | None) -> str:
-    src = inspect.getsource(fn)
-    return hashlib.sha256(
-        (src + "\n--oracle--\n" + (sql or "")).encode()
-    ).hexdigest()
-
-
 def current_fingerprints() -> dict[str, str]:
     sys.path.insert(0, REPO)
     import __spark_entry__ as m
 
     osql = m.oracle_sql()
     return {
-        q: fingerprint(fn, osql.get(q)) for q, fn in m.queries().items()
+        q: m.gate_fingerprint(fn, osql.get(q))
+        for q, fn in m.queries().items()
     }
 
 
@@ -173,8 +169,8 @@ def main(argv: list[str]) -> int:
     print(f"ledger: {len(ledger)} green-recorded queries {where}")
     for q in stale:
         print(f"STALE: {q} changed since its round-"
-              f"{ledger[q]['green_round']} green record — rotate it "
-              "into the gate window")
+              f"{ledger[q]['green_round']} green record — queries() "
+              "keeps it in the gate window until a snapshot re-gates it")
     if check_only and stale:
         return 1
     return 0

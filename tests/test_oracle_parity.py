@@ -246,3 +246,41 @@ def test_gate_ledger_check_is_read_only():
     assert after == before, "--check modified GATE_LEDGER.json bytes"
     assert os.path.getmtime(gate_ledger.LEDGER_PATH) == mtime
     assert rc in (0, 1)  # rc carries staleness, never a write
+
+
+def test_gate_order_rule_on_synthetic_ledger():
+    """queries()'s order rule on a made-up ledger: new and changed
+    entries first, then the rows-only residents, then the rest oldest
+    green_round first; name breaks every tie, whatever the input
+    order."""
+    ledger = {
+        "chg-b": {"green_round": 9, "fingerprint": "old"},
+        "old-r10": {"green_round": 10, "fingerprint": "f"},
+        "old-r11-a": {"green_round": 11, "fingerprint": "f"},
+        "old-r11-b": {"green_round": 11, "fingerprint": "f"},
+        "old-r12": {"green_round": 12, "fingerprint": "f"},
+    }
+    names = ["old-r12", "ro-z", "old-r11-b", "new-a", "old-r10", "ro-a",
+             "chg-b", "old-r11-a"]
+    fps = {q: "f" for q in names}
+    assert entrymod.gate_order(names, ledger, fps, ("ro-z", "ro-a")) == [
+        "chg-b", "new-a", "ro-a", "ro-z",
+        "old-r10", "old-r11-a", "old-r11-b", "old-r12",
+    ]
+    assert entrymod.gate_order(
+        list(reversed(names)), ledger, fps, ("ro-a", "ro-z")
+    ) == entrymod.gate_order(names, ledger, fps, ("ro-z", "ro-a"))
+
+    # 51 entries that must gate: the rule cannot fit them, and the one
+    # it pushes past position 50 is exactly what
+    # test_gate_rotation_invariant reports
+    fresh = [f"new-{i:02d}" for i in range(51)]
+    veterans = ["old-r12", "old-r10", "old-r11-b", "old-r11-a"]
+    fps.update({q: "f" for q in fresh})
+    order = entrymod.gate_order(veterans + fresh, ledger, fps, ())
+    assert order == fresh + sorted(veterans)
+    must_gate_past_horizon = [
+        q for q in order[50:]
+        if q not in ledger or ledger[q]["fingerprint"] != fps[q]
+    ]
+    assert must_gate_past_horizon == ["new-50"]

@@ -683,41 +683,6 @@ def test_state_batch_id_refuses_pre_guard_state(spark):
     assert _state_batch_id(None) is None
 
 
-def test_r14_rotation_candidates_match_ledger():
-    # The r14 plan of record must BE the r9 cohort (the r12 verdict's
-    # lesson: a rotation comment that drifts from the ledger
-    # overstates what the next window will hold). Derived check, so
-    # re-gating in r14 updates the ledger and retires this list
-    # naturally — at that point the constant should be dropped or
-    # replaced by R15's.
-    import json
-    import os
-
-    import __spark_entry__ as entry
-
-    ledger_path = os.path.join(
-        os.path.dirname(__file__), "..", "GATE_LEDGER.json"
-    )
-    with open(ledger_path) as f:
-        ledger = json.load(f)
-    r9 = sorted(q for q, e in ledger.items() if e["green_round"] == 9)
-    if not r9:
-        return  # the cohort rotated; the plan constant is historical
-    # r14 executed its half of the split: before the r14 snapshot
-    # lands the ledger still shows the whole 49-entry cohort and the
-    # plan is R14_ROTATION (this round's window share) + the pinned
-    # R15 remainder; once the snapshot advances the 30 rotated
-    # entries, the cohort shrinks to exactly the R15 candidates.
-    whole = sorted(
-        list(entry.R14_ROTATION) + list(entry.R15_ROTATION_CANDIDATES)
-    )
-    remainder = sorted(entry.R15_ROTATION_CANDIDATES)
-    assert r9 in (whole, remainder), (
-        f"rotation plan drifted from the ledger r9 cohort: "
-        f"{sorted(set(r9) ^ set(whole))}"
-    )
-
-
 def test_cms_candidate_top_m_prefilter(spark):
     # The promised 100 TB candidate source, concrete and
     # deterministic (hash-bucketed, never spark_partition_id): with

@@ -25,6 +25,7 @@ def _base(spark):
 
 
 def test_auto_kernel_requires_bounded_memory_regime(spark, monkeypatch):
+    from awskinesisconsumer_spark.operators import similarity
     from awskinesisconsumer_spark.operators.similarity import (
         _resolve_vectorized,
     )
@@ -36,17 +37,14 @@ def test_auto_kernel_requires_bounded_memory_regime(spark, monkeypatch):
     # enforcement: no task sees more than cell_cap rows)
     assert _resolve_vectorized(base, "vec_id", None, 64) is True
     # the size gate refuses when the input is "too big to prove the
-    # one-task-per-cell regime safe" (simulated via the env knob)
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_AUTO_BYTES", "1")
+    # one-task-per-cell regime safe" (simulated via the constant)
+    monkeypatch.setattr(similarity, "_AUTO_KERNEL_BYTES", 1)
     assert _resolve_vectorized(base, "vec_id", None) is False
     # ... but cell_cap still opts in, while its cell_cap^2 x 8-byte
     # matrix fits the 512 MiB the default size gate admits
     assert _resolve_vectorized(base, "vec_id", None, 64) is True
     assert _resolve_vectorized(base, "vec_id", None, 8192) is True
     assert _resolve_vectorized(base, "vec_id", None, 8193) is False
-    # malformed env must fall back, not raise at plan-build time
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_AUTO_BYTES", "not-a-number")
-    assert _resolve_vectorized(base, "vec_id", None) is True
     # explicit force always wins
     assert _resolve_vectorized(base, "vec_id", True) is True
     assert _resolve_vectorized(base, "vec_id", False, 64) is False
@@ -209,12 +207,3 @@ def test_counter_stream_runs_without_available_now(spark, tmp_path):
         q.stop()
     got = {r["bin"]: r["c"] for r in spark.read.parquet(out).collect()}
     assert got == {0: 2, 4: 1}
-
-
-def test_fan_out_small_malformed_env_falls_back(spark, monkeypatch):
-    from awskinesisconsumer_spark.operators.skew import fan_out_small
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_TASK_BYTES", "4MiB")
-    out = fan_out_small(docs)  # must not raise
-    assert out.count() == docs.count()

@@ -102,31 +102,42 @@ def test_gate_head_composition():
     # The external driver gates the first 50 queries() entries. The
     # expected composition is DERIVED (r10 verdict item 1b: the
     # previous verbatim 50-entry pin went stale the moment the window
-    # legitimately rotated) from GATE_LEDGER.json plus the round
-    # constant __spark_entry__.GATE_NEW_THIS_ROUND, via invariants
-    # that hold both mid-round (before the snapshot lands) and after:
+    # legitimately rotated) from GATE_LEDGER.json and the entries'
+    # current fingerprints, via invariants that hold both mid-round
+    # (before the snapshot lands) and after:
     import json
     import os
+    import sys
 
     import __spark_entry__ as m
 
-    keys = list(m.queries())
-    new = list(m.GATE_NEW_THIS_ROUND)
-    # (1) this round's new/changed registrations head the window
-    assert keys[: len(new)] == new, (
-        "GATE_NEW_THIS_ROUND must be the literal head of queries()"
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(__file__), "..", "scripts")
     )
-    assert len(new) <= 50
+    import gate_ledger
+
+    keys = list(m.queries())
     ledger_path = os.path.join(
         os.path.dirname(__file__), "..", "GATE_LEDGER.json"
     )
     with open(ledger_path) as f:
         ledger = json.load(f)
+    fps = gate_ledger.current_fingerprints()
+    rows_only = set(getattr(m, "ROWS_ONLY_BY_DESIGN", ()))
+    # (1) every new or changed registration (no ledger record, or a
+    # fingerprint that drifted from it) sits inside the window
+    new = [
+        q for q in keys if q not in rows_only
+        and (q not in ledger or ledger[q]["fingerprint"] != fps[q])
+    ]
+    assert set(new) <= set(keys[:50]), (
+        f"new/changed entries past the gate window: "
+        f"{sorted(set(new) - set(keys[:50]))}"
+    )
     # (2) entries with no green record anywhere must be new this round
     # OR declared rows-only by design AND parked inside the window
     # (rows-only entries never earn a hash-green ledger record, so
     # the window is the only place their weaker check is refreshed)
-    rows_only = set(getattr(m, "ROWS_ONLY_BY_DESIGN", ()))
     assert rows_only <= set(keys[:50]), (
         f"rows-only entries must live inside the gate window: "
         f"{sorted(rows_only - set(keys[:50]))}"
@@ -147,14 +158,6 @@ def test_gate_head_composition():
     )
     # (4) changed entries (fingerprint drift vs their green record)
     # must sit inside the window so this round's gate re-records them
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(__file__), "..", "scripts")
-    )
-    import gate_ledger
-
-    fps = gate_ledger.current_fingerprints()
     stale_in_tail = [
         q for q in keys[50:]
         if q in ledger and ledger[q]["fingerprint"] != fps[q]

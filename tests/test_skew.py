@@ -88,16 +88,15 @@ def test_fan_out_small_gate(spark):
     assert fan_out_small(stream) is stream
 
 
-def test_fan_out_small_preserves_cdc_output(spark):
+def test_fan_out_small_preserves_cdc_output(spark, monkeypatch):
     # The fan-out + outer-explode CDC path must emit EXACTLY the rows
     # of the single-partition form (per-row outputs are
     # partition-layout independent by construction).
+    from awskinesisconsumer_spark.operators import skew
     from awskinesisconsumer_spark.operators.corpus_prep import (
         content_defined_chunks_clamped,
     )
     from awskinesisconsumer_spark.operators.dedup import portable_hash52
-
-    import os
 
     docs = load_table(spark, "documents", SF).select("doc_id", "text")
     kw = dict(id_col="doc_id", text_col="text", window=8, divisor=64,
@@ -105,11 +104,8 @@ def test_fan_out_small_preserves_cdc_output(spark):
     fanned = sorted(
         map(tuple, content_defined_chunks_clamped(docs, **kw).collect())
     )
-    os.environ["SPARK_GRAFT_FANOUT_TASK_BYTES"] = "0"
-    try:
-        one_df = content_defined_chunks_clamped(docs, **kw)
-        assert "Exchange" not in one_df._jdf.queryExecution().toString()
-        one = sorted(map(tuple, one_df.collect()))
-    finally:
-        del os.environ["SPARK_GRAFT_FANOUT_TASK_BYTES"]
+    monkeypatch.setattr(skew, "_FANOUT_TASK_BYTES", 0)
+    one_df = content_defined_chunks_clamped(docs, **kw)
+    assert "Exchange" not in one_df._jdf.queryExecution().toString()
+    one = sorted(map(tuple, one_df.collect()))
     assert fanned == one and len(fanned) > 0
