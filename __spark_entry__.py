@@ -5059,16 +5059,21 @@ def _ul2_plan(spark: SparkSession, sf: str) -> DataFrame:
     return ul2_plan(docs, id_col="doc_id", text_col="text")
 
 
+def _centroid_table(spark: SparkSession, centroids) -> DataFrame:
+    """The offline-trained centroid TABLE shape the `-table` entries
+    feed the IVF operators: (cell int, embedding array<double>), cell
+    = the centroid's list position."""
+    return spark.createDataFrame(
+        list(enumerate(centroids)), "cell int, embedding array<double>"
+    )
+
+
 def _semantic_dedup_table(spark: SparkSession, sf: str) -> DataFrame:
-    # SemDeDup with the centroid-TABLE assign path
-    # (operators/similarity.py ivf_assign_table): the r11 verdict's
-    # scale lever — the literal argmin is an O(k) expression tree
-    # capping k at ~hundreds, while the paper's n/k ~ 2k balance rule
-    # needs k to track corpus size; the table form broadcasts the
-    # centroid matrix into an Arrow-batched numpy argmin kernel,
-    # BIT-IDENTICAL to the literal fold (dim-sequential accumulation,
-    # first-min ties — pinned in tests/test_round12_ops.py), so the
-    # ext-dedup-semantic oracle gates this path verbatim.
+    # SemDeDup with its centroids given as a (cell, embedding) TABLE
+    # (the offline-trained quantizer shape): semantic_dedup collects
+    # it once into the matrix its ivf_assign kernel broadcasts, so the
+    # cells — and every cluster — equal ext-dedup-semantic's, whose
+    # oracle gates this entry verbatim.
     from awskinesisconsumer_spark.operators.similarity import (
         ivf_centroids_from_sample, semantic_dedup,
     )
@@ -5079,7 +5084,7 @@ def _semantic_dedup_table(spark: SparkSession, sf: str) -> DataFrame:
     )
     return semantic_dedup(
         emb, id_col="vec_id", vec_col="embedding",
-        centroids=centroids, threshold=0.3, assign="table",
+        centroids=_centroid_table(spark, centroids), threshold=0.3,
     )
 
 
@@ -5234,18 +5239,14 @@ def _semantic_keep_best(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _ann_ivf_kmeans_table(spark: SparkSession, sf: str) -> DataFrame:
-    # IVF ANN with centroids trained through the MATRIX path
-    # (operators/similarity.py kmeans_train_table): identical Lloyd
-    # algebra to kmeans_refine_centroids (same means, empty-cell
-    # rule, order_col bit-determinism) with each round's assignment
-    # through the ivf_assign_table numpy kernel instead of k literal
-    # folds — so the trained centroids are EQUAL given the same seed
-    # (pinned tests/test_round12_ops.py) and the
-    # ext-similarity-ivf-kmeans oracle gates this path verbatim.
-    # This is the offline-quantizer-training shape for k past the
-    # literal ceiling (the r11 verdict's missing primitive).
+    # IVF ANN with k-means training seeded from a (cell, embedding)
+    # centroid TABLE (the offline-quantizer shape):
+    # kmeans_refine_centroids collects it once into its matrix, so the
+    # trained centroids EQUAL those from the list seed (pinned in
+    # tests/test_similarity.py) and the ext-similarity-ivf-kmeans
+    # oracle gates this entry verbatim.
     from awskinesisconsumer_spark.operators.similarity import (
-        ivf_centroids_from_sample, kmeans_train_table, knn_ivf,
+        ivf_centroids_from_sample, kmeans_refine_centroids, knn_ivf,
     )
 
     emb = load_table(spark, "embeddings", sf)
@@ -5254,9 +5255,9 @@ def _ann_ivf_kmeans_table(spark: SparkSession, sf: str) -> DataFrame:
     seed = ivf_centroids_from_sample(
         corpus, id_col="vec_id", vec_col="embedding", n_centroids=8
     )
-    centroids = kmeans_train_table(
-        corpus, vec_col="embedding", init_centroids=seed, n_iter=3,
-        tol=0.0, order_col="vec_id",
+    centroids = kmeans_refine_centroids(
+        corpus, vec_col="embedding", centroids=_centroid_table(spark, seed),
+        n_iter=3, tol=0.0, order_col="vec_id",
     )
     return knn_ivf(
         corpus, id_col="vec_id", vec_col="embedding",
@@ -5266,11 +5267,10 @@ def _ann_ivf_kmeans_table(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _ann_ivf_table(spark: SparkSession, sf: str) -> DataFrame:
-    # ext-similarity-ivf through the table-assign path: the corpus
-    # assignment runs in the ivf_assign_table numpy kernel
-    # (bit-identical to the literal argmin) and the probe-side cell
-    # choice is the same driver arithmetic — so the ext-similarity-ivf
-    # oracle gates this form verbatim. The large-k IVF query shape.
+    # ext-similarity-ivf with its centroids given as a (cell,
+    # embedding) TABLE: knn_ivf collects it once into the matrix that
+    # both the corpus assignment and the probe-side cell choice use,
+    # so the ext-similarity-ivf oracle gates this form verbatim.
     from awskinesisconsumer_spark.operators.similarity import (
         ivf_centroids_from_sample, knn_ivf,
     )
@@ -5284,14 +5284,13 @@ def _ann_ivf_table(spark: SparkSession, sf: str) -> DataFrame:
     return knn_ivf(
         corpus, id_col="vec_id", vec_col="embedding",
         query=[float(x) for x in probe.embedding],
-        centroids=centroids, n_probes=2, k=10, assign="table",
+        centroids=_centroid_table(spark, centroids), n_probes=2, k=10,
     )
 
 
 def _ann_ivf_pq_table(spark: SparkSession, sf: str) -> DataFrame:
-    # ext-similarity-ivf-pq through the table-assign path (see
-    # _ann_ivf_table) — the billion-scale IVF-PQ layout with the
-    # coarse quantizer past the literal ceiling; shares the
+    # ext-similarity-ivf-pq with its coarse centroids given as a
+    # (cell, embedding) TABLE (see _ann_ivf_table); shares the
     # ext-similarity-ivf-pq oracle verbatim.
     from awskinesisconsumer_spark.operators.similarity import (
         ivf_centroids_from_sample, knn_ivf_pq, pq_codebooks_refined,
@@ -5309,8 +5308,9 @@ def _ann_ivf_pq_table(spark: SparkSession, sf: str) -> DataFrame:
     )
     return knn_ivf_pq(
         corpus, id_col="vec_id", vec_col="embedding",
-        query=[float(x) for x in probe.embedding], centroids=centroids,
-        codebooks=cbs, n_probes=2, k=10, assign="table",
+        query=[float(x) for x in probe.embedding],
+        centroids=_centroid_table(spark, centroids),
+        codebooks=cbs, n_probes=2, k=10,
     ).select(
         "vec_id", "adc_dist",
         F.concat_ws(",", F.col("pq_code").cast("array<string>"))
@@ -7252,6 +7252,19 @@ def gate_fingerprint(fn, sql: str | None) -> str:
     ).hexdigest()
 
 
+def gate_key(q: str, ledger: dict, fingerprints: dict[str, str],
+             rows_only) -> tuple[int, int, str]:
+    """`gate_order`'s sort key for one entry: (0, 0, q) if it has no
+    ledger record or its fingerprint differs from it (it must gate),
+    (1, 0, q) for a rows-only resident, else (2, green_round, q)."""
+    if q in rows_only:
+        return (1, 0, q)
+    rec = ledger.get(q)
+    if rec is None or rec["fingerprint"] != fingerprints[q]:
+        return (0, 0, q)
+    return (2, rec["green_round"], q)
+
+
 def gate_order(names, ledger: dict, fingerprints: dict[str, str],
                rows_only) -> list[str]:
     """Verification-priority order of the registry: entries with no
@@ -7260,16 +7273,9 @@ def gate_order(names, ledger: dict, fingerprints: dict[str, str],
     record), then the rest by ascending ledger `green_round` (oldest
     evidence re-gates first); name breaks every tie."""
     rows_only = set(rows_only)
-
-    def key(q):
-        if q in rows_only:
-            return (1, 0, q)
-        rec = ledger.get(q)
-        if rec is None or rec["fingerprint"] != fingerprints[q]:
-            return (0, 0, q)
-        return (2, rec["green_round"], q)
-
-    return sorted(names, key=key)
+    return sorted(
+        names, key=lambda q: gate_key(q, ledger, fingerprints, rows_only)
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -14674,14 +14680,10 @@ def oracle_sql() -> dict[str, str]:
         UNION ALL SELECT 'token_mean_ci_hi:' || "group", ci_hi
           FROM ({d["ext-bootstrap-ci-grouped"]})
     """
-    # Matrix-path quantizer training is Lloyd-identical to the
-    # literal refinement (same means, empty-cell rule, order_col
-    # fold; assignment kernel bit-identical) — the kmeans IVF twin
-    # gates it verbatim.
+    # The -table entries feed the same centroids as a (cell,
+    # embedding) table, which the operators collect into the same
+    # matrix — the list-centroid twins gate them verbatim.
     d["ext-similarity-ivf-kmeans-table"] = d["ext-similarity-ivf-kmeans"]
-    # Table-assign IVF / IVF-PQ query forms: corpus assignment through
-    # the bit-identical kernel, probe-side cell choice unchanged —
-    # the literal-form oracles gate them verbatim.
     d["ext-similarity-ivf-table"] = d["ext-similarity-ivf"]
     d["ext-similarity-ivf-pq-table"] = d["ext-similarity-ivf-pq"]
     # Quality-ranked SemDeDup: the semantic pair CTE + CC (the

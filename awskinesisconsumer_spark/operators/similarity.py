@@ -170,23 +170,6 @@ def knn_lsh(
     return knn_brute_force(cand, id_col=id_col, vec_col=vec_col, query=query, k=k)
 
 
-def ivf_assign(df: DataFrame, *, vec_col: str, centroids: list[list[float]],
-               out_col: str = "cell") -> DataFrame:
-    """IVF coarse quantizer: assign each vector to its nearest centroid
-    (argmin over literal centroids, computed as min of (dist, idx)
-    structs — pure column expressions, narrow). At 100 TB the corpus is
-    written partitionBy(cell) once; queries then touch only probed
-    cells via partition pruning."""
-    dists = [
-        F.struct(
-            (_norm2_diff(F.col(vec_col), c)).alias("d"),
-            F.lit(i).alias("i"),
-        )
-        for i, c in enumerate(centroids)
-    ]
-    return df.withColumn(out_col, F.array_min(F.array(*dists))["i"])
-
-
 def _norm2_diff(v, centroid: list[float]):
     c = F.array(*[F.lit(float(x)) for x in centroid])
     return F.aggregate(
@@ -199,7 +182,7 @@ def _centroid_matrix(centroids, *, centroid_id_col: str,
                      centroid_vec_col: str, caller: str):
     """Coerce a centroid spec — list[list[float]], numpy (k, dim)
     matrix, or a (`centroid_id_col`, `centroid_vec_col`) DataFrame —
-    into the dense float64 (k, dim) matrix the table-assign kernels
+    into the dense float64 (k, dim) matrix the assignment kernels
     broadcast. DataFrame ids must be exactly 0..k-1 (they ARE the
     emitted cell ids); size-guarded because the matrix rides every
     task's closure."""
@@ -253,61 +236,77 @@ def _centroid_matrix(centroids, *, centroid_id_col: str,
     return C
 
 
-def ivf_assign_table(
+# Cap on one Arrow batch's (rows x k) distance matrix in the
+# assignment kernels: 4M float64 cells, 32 MiB (plus a same-size
+# temporary). A batch is scored in blocks of _ASSIGN_BLOCK_CELLS // k
+# rows, so memory per task stays flat however large k grows.
+_ASSIGN_BLOCK_CELLS = 1 << 22
+
+
+def _sq_dist_blocks(v: pd.Series, C, rows: int):
+    """Yield (positions, d2) over the vectors of `v` whose length is
+    the centroid dim, `rows` at a time: d2 is the (rows x k) squared
+    L2 distance of each to every centroid, accumulated
+    dimension-SEQUENTIALLY (vectorized over rows and centroids, but
+    each dim's term added in dim order) — the exact float left fold
+    of `_norm2_diff` and of the oracles' list_reduce, so the argmin
+    replays in SQL bit for bit."""
+    import numpy as np
+
+    k, dim = C.shape
+    ok = v.apply(lambda x: x is not None and len(x) == dim).to_numpy()
+    hit = np.nonzero(ok)[0]
+    for s in range(0, len(hit), rows):
+        pos = hit[s:s + rows]
+        V = np.stack(v.iloc[pos].to_numpy()).astype(np.float64)
+        d2 = np.zeros((len(pos), k))
+        for j in range(dim):
+            diff = V[:, j:j + 1] - C[None, :, j]
+            d2 += diff * diff
+        yield pos, d2
+
+
+def ivf_assign(
     df: DataFrame, *, vec_col: str, centroids, out_col: str = "cell",
     centroid_id_col: str = "cell", centroid_vec_col: str | None = None,
 ) -> DataFrame:
-    """`ivf_assign` with the centroids as DATA instead of literal
-    expressions — the scale lever the literal form lacks: its argmin
-    is an O(k) expression TREE (one aggregate fold per centroid), so
-    Catalyst plan size caps k at ~hundreds, while SemDeDup's own
-    balance rule (n/k ~ 2k docs per cell) needs k to GROW with the
-    corpus. Here the centroid matrix rides the closure as one numpy
-    (k x dim) array into an Arrow-batched pandas UDF — k in the tens
-    of thousands is a few MB of broadcast, and the per-row cost is a
-    vectorized matrix fold instead of k interpreted aggregates.
+    """IVF coarse quantizer: assign each vector to its nearest centroid.
+    The (k x dim) float64 centroid matrix rides the closure into an
+    Arrow-batched pandas UDF, so k can GROW with the corpus (SemDeDup's
+    n/k ~ 2k balance rule) — k in the tens of thousands is a few MB of
+    broadcast — and each batch is scored in row blocks that bound its
+    distance matrix (`_ASSIGN_BLOCK_CELLS`).
 
     `centroids` is a list[list[float]] / numpy (k, dim) matrix, or a
     DataFrame holding (`centroid_id_col`, `centroid_vec_col`
     [default: `vec_col`]) — the trained-offline centroid TABLE shape;
-    ids must be exactly 0..k-1 (they ARE the emitted cell ids, same
-    contract as the literal form's positions).
+    ids must be exactly 0..k-1 (they ARE the emitted cell ids, as list
+    positions are).
 
-    BIT-IDENTICAL to `ivf_assign` (same contract as `knn_join_topk`'s
-    kernel): the squared-L2 accumulation is dimension-SEQUENTIAL
-    (vectorized over rows and centroids, but each dim's term is added
-    in dim order — the exact float left fold of the HOF/oracle form),
-    and ties argmin to the LOWEST centroid index like the struct
-    array_min. Degenerate rows (NULL vector, or length != centroid
-    dim, where zip_with pads with NULL and the whole fold collapses
-    to a NULL distance) land in cell 0 — pinned equal to the literal
-    form in tests/test_round12_ops.py.
+    The squared-L2 accumulation is dimension-sequential (see
+    `_sq_dist_blocks`) and ties argmin to the LOWEST centroid index,
+    so the DuckDB twins replay it exactly. Degenerate rows (NULL
+    vector, or length != centroid dim) and rows whose distances are
+    all NaN land in cell 0.
 
-    Scale shape: map-only (no shuffle, pipelines into the scan); the
-    corpus is then written partitionBy(cell) once, exactly as with
-    the literal form.
+    Scale shape: map-only (no shuffle, pipelines into the scan). At
+    100 TB the corpus is written partitionBy(cell) once; queries then
+    touch only probed cells via partition pruning.
     """
     import numpy as np
 
     C = _centroid_matrix(centroids,
                          centroid_id_col=centroid_id_col,
                          centroid_vec_col=centroid_vec_col or vec_col,
-                         caller="ivf_assign_table")
-    k, dim = C.shape
+                         caller="ivf_assign")
+    rows = max(1, _ASSIGN_BLOCK_CELLS // C.shape[0])
 
     @pandas_udf("int")
     def _assign(v: pd.Series) -> pd.Series:
-        out = pd.Series([0] * len(v), dtype="int32")
-        ok = v.apply(lambda x: x is not None and len(x) == dim)
-        if ok.any():
-            V = np.array([[float(x) for x in vec] for vec in v[ok]],
-                         dtype=np.float64)
-            d2 = np.zeros((V.shape[0], k))
-            for j in range(dim):
-                diff = V[:, j:j + 1] - C[None, :, j]
-                d2 += diff * diff
-            out[ok.to_numpy()] = d2.argmin(axis=1).astype("int32")
-        return out
+        out = np.zeros(len(v), dtype=np.int32)
+        for pos, d2 in _sq_dist_blocks(v, C, rows):
+            out[pos] = d2.argmin(axis=1)
+        return pd.Series(out)
 
     return df.withColumn(out_col, _assign(F.col(vec_col)))
 
@@ -340,38 +339,23 @@ def ivf_centroids_from_sample(df: DataFrame, *, id_col: str, vec_col: str,
 def knn_ivf(
     df: DataFrame, *, id_col: str, vec_col: str, query: list[float],
     centroids, n_probes: int = 2, k: int = 10,
-    assign: str = "literal",
 ) -> DataFrame:
     """IVF ANN top-k: score only vectors in the `n_probes` cells
-    nearest the query, exact cosine re-rank inside them.
-
-    `assign="table"` routes corpus assignment through
-    `ivf_assign_table` (bit-identical; k can track corpus size, and
-    `centroids` may be a matrix or DataFrame). The probe-side cell
-    choice is the same driver arithmetic either way — at scale the
-    corpus is partitionBy(cell)-laid-out once and the probe filter
-    becomes partition PRUNING."""
+    nearest the query, exact cosine re-rank inside them. `centroids`
+    takes any `ivf_assign` form. The probe-side cell choice is driver
+    arithmetic over the same matrix — at scale the corpus is
+    partitionBy(cell)-laid-out once and the probe filter becomes
+    partition PRUNING."""
     def l2(a, b):
         return sum((x - y) ** 2 for x, y in zip(a, b))
 
-    if assign == "table":
-        cents_list = _centroid_matrix(
-            centroids, centroid_id_col="cell", centroid_vec_col=vec_col,
-            caller="knn_ivf",
-        ).tolist()
-        # reuse the coerced list for the corpus assign too: a
-        # DataFrame centroid spec would otherwise re-run the whole
-        # coercion (shape agg + collect + upstream plan) a second
-        # time inside ivf_assign_table — identical result, half the
-        # driver jobs
-        centroids = cents_list
-    else:
-        cents_list = centroids
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
+                         centroid_vec_col=vec_col, caller="knn_ivf")
+    cents_list = C.tolist()
     order = sorted(range(len(cents_list)),
                    key=lambda i: l2(query, cents_list[i]))
     probe = order[:n_probes]
-    assigned = _assign_cells(df, vec_col=vec_col, centroids=centroids,
-                             assign=assign, caller="knn_ivf")
+    assigned = ivf_assign(df, vec_col=vec_col, centroids=C)
     cand = assigned.where(F.col("cell").isin(probe))
     return knn_brute_force(cand, id_col=id_col, vec_col=vec_col, query=query, k=k)
 
@@ -442,7 +426,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     cell_cap: int | None = None,
     vectorized: bool | None = None,
-    assign: str = "literal",
     n_assign: int = 1,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) — the cluster-then-dedup-within-
@@ -503,13 +486,10 @@ def semantic_dedup(
     on the near-dup pair table (rare by construction), never the
     corpus.
 
-    `assign="table"` routes the cell assignment through
-    `ivf_assign_table` (bit-identical, see its docstring) — the
-    production path once k grows past the literal expression tree's
-    ~hundreds-of-centroids ceiling; `centroids` may then also be a
-    numpy matrix or a (cell, vector) DataFrame. This is what makes
-    the paper's n/k ~ 2k balance rule EXECUTABLE at corpus scale:
-    k tracks sqrt(n/2) and the per-cell pair work stays flat
+    `centroids` takes any `ivf_assign` form: a list, a numpy matrix
+    or a (cell, vector) DataFrame. Its broadcast-matrix kernel is what
+    makes the paper's n/k ~ 2k balance rule EXECUTABLE at corpus
+    scale: k tracks sqrt(n/2) and the per-cell pair work stays flat
     (measured near-linear in SCALING.md round 12) instead of the
     fixed-k quadratic the r11 study measured.
 
@@ -530,10 +510,12 @@ def semantic_dedup(
     """
     from .dedup import connected_components
 
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
+                         centroid_vec_col=vec_col, caller="semantic_dedup")
     base, pairs = _semantic_base_and_pairs(
-        df, id_col=id_col, vec_col=vec_col, centroids=centroids,
+        df, id_col=id_col, vec_col=vec_col, centroids=C,
         threshold=threshold, cell_cap=cell_cap, vectorized=vectorized,
-        assign=assign, n_assign=n_assign, caller="semantic_dedup",
+        n_assign=n_assign, caller="semantic_dedup",
     )
     cc = connected_components(
         pairs, vertices=df.select(F.col(id_col).alias("id"))
@@ -556,7 +538,6 @@ def semantic_near_dup_pairs(
     threshold: float = 0.95,
     cell_cap: int | None = None,
     vectorized: bool | None = None,
-    assign: str = "literal",
     n_assign: int = 1,
 ) -> DataFrame:
     """The PAIR table under `semantic_dedup` as a public surface:
@@ -567,34 +548,34 @@ def semantic_near_dup_pairs(
     Same cell assignment, skew cap, scoring, and `n_assign`
     (multi-cell candidate widening) contracts as `semantic_dedup`
     (whose docstring has the scale shape)."""
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
+                         centroid_vec_col=vec_col,
+                         caller="semantic_near_dup_pairs")
     _, pairs = _semantic_base_and_pairs(
-        df, id_col=id_col, vec_col=vec_col, centroids=centroids,
+        df, id_col=id_col, vec_col=vec_col, centroids=C,
         threshold=threshold, cell_cap=cell_cap, vectorized=vectorized,
-        assign=assign, n_assign=n_assign,
-        caller="semantic_near_dup_pairs",
+        n_assign=n_assign, caller="semantic_near_dup_pairs",
     )
     return pairs
 
 
 def _semantic_base_and_pairs(df, *, id_col, vec_col, centroids,
-                             threshold, cell_cap, vectorized, assign,
-                             n_assign, caller):
+                             threshold, cell_cap, vectorized, n_assign,
+                             caller):
     """The assignment + cell-local pair mine shared by
     `semantic_dedup` and `semantic_near_dup_pairs` (one surface, so
     the n_assign cap wiring cannot drift between them): returns
     (base, pairs) where `base` is (id, PRIMARY cell, vec) — one row
     per input — and `pairs` the deduplicated (id_a, id_b) table."""
     if n_assign == 1:
-        cells = _assign_cells(df, vec_col=vec_col, centroids=centroids,
-                              assign=assign, caller=caller)
+        cells = ivf_assign(df, vec_col=vec_col, centroids=centroids)
         members = base = cells.select(
             F.col(id_col), F.col("cell"), F.col(vec_col)
         )
     else:
-        multi = _assign_cells_multi(
-            df, vec_col=vec_col, centroids=centroids, assign=assign,
-            n_assign=n_assign, caller=caller,
-        )
+        multi = ivf_assign_multi(
+            df, vec_col=vec_col, centroids=centroids, n_assign=n_assign,
+        ).withColumn("cell", F.col("cells")[0])
         base = multi.select(F.col(id_col), F.col("cell"), F.col(vec_col))
         members = multi.select(
             F.col(id_col), F.explode("cells").alias("cell"),
@@ -626,7 +607,6 @@ def semantic_dedup_recall_audit(
     n_assign_values: tuple[int, ...] = (1, 2),
     cell_cap: int | None = None,
     vectorized: bool | None = None,
-    assign: str = "literal",
     truth_max_rows: int | None = 20_000,
 ) -> DataFrame:
     """SemDeDup recall audit (r12 verdict item 2) — the family
@@ -702,6 +682,9 @@ def semantic_dedup_recall_audit(
                 "truth_max_rows / pass truth_max_rows=None "
                 "deliberately."
             )
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
+                         centroid_vec_col=vec_col,
+                         caller="semantic_dedup_recall_audit")
     truth = embedding_near_dup_pairs(
         df, id_col=id_col, vec_col=vec_col, threshold=threshold,
         planes=None,
@@ -712,8 +695,8 @@ def semantic_dedup_recall_audit(
     per_true = truth.select(bucket).groupBy("bucket_lo").agg(
         F.count(F.lit(1)).alias("n_true_pairs")
     )
-    # try/finally: a failure while building the candidate legs (bad
-    # assign=, degenerate centroids, ...) must not strand the
+    # try/finally: a failure while building the candidate legs (a
+    # bad cell_cap, ...) must not strand the
     # persisted truth table — the caching-module contract
     try:
         if cell_cap is None:
@@ -725,18 +708,13 @@ def semantic_dedup_recall_audit(
             # levels are audited (plan-asserted in tests).
             deepest = max(int(n) for n in n_assign_values)
             if deepest == 1:
-                members = _assign_cells(
-                    df, vec_col=vec_col, centroids=centroids,
-                    assign=assign, caller="semantic_dedup_recall_audit",
-                ).select(
+                members = ivf_assign(df, vec_col=vec_col, centroids=C).select(
                     F.col(id_col), F.col("cell"), F.col(vec_col),
                     F.lit(1).alias("_rank"),
                 )
             else:
-                members = _assign_cells_multi(
-                    df, vec_col=vec_col, centroids=centroids,
-                    assign=assign, n_assign=deepest,
-                    caller="semantic_dedup_recall_audit",
+                members = ivf_assign_multi(
+                    df, vec_col=vec_col, centroids=C, n_assign=deepest,
                 ).select(
                     F.col(id_col),
                     F.posexplode("cells").alias("_p", "cell"),
@@ -787,9 +765,9 @@ def semantic_dedup_recall_audit(
         parts = []
         for n in n_assign_values:
             cand = semantic_near_dup_pairs(
-                df, id_col=id_col, vec_col=vec_col, centroids=centroids,
+                df, id_col=id_col, vec_col=vec_col, centroids=C,
                 threshold=threshold, cell_cap=cell_cap,
-                vectorized=vectorized, assign=assign, n_assign=int(n),
+                vectorized=vectorized, n_assign=int(n),
             ).select("id_a", "id_b")
             caught = truth.join(cand, ["id_a", "id_b"], "left_semi")
             per_caught = caught.select(bucket).groupBy("bucket_lo").agg(
@@ -821,19 +799,10 @@ def semantic_dedup_recall_audit(
     return release_after(out, truth)
 
 
-def _assign_cells(df, *, vec_col, centroids, assign, caller):
-    if assign == "table":
-        return ivf_assign_table(df, vec_col=vec_col, centroids=centroids)
-    if assign == "literal":
-        return ivf_assign(df, vec_col=vec_col, centroids=centroids)
-    raise ValueError(
-        f"{caller}: assign must be 'literal' or 'table', got {assign!r}"
-    )
-
-
 def ivf_assign_multi(
-    df: DataFrame, *, vec_col: str, centroids: list[list[float]],
-    n_assign: int = 2, out_col: str = "cells",
+    df: DataFrame, *, vec_col: str, centroids, n_assign: int = 2,
+    out_col: str = "cells",
+    centroid_id_col: str = "cell", centroid_vec_col: str | None = None,
 ) -> DataFrame:
     """`ivf_assign`'s n-nearest generalization: each vector gets the
     ids of its `n_assign` NEAREST centroids, ordered by (squared-L2
@@ -847,101 +816,33 @@ def ivf_assign_multi(
     bounded: <= n_assign x the membership rows, <= n_assign x the
     candidate pairs.
 
-    Same argmin arithmetic as `ivf_assign` (one aggregate fold per
-    centroid, ties to the lowest index via the (d, i) struct sort);
-    degenerate rows (NULL vector / dim mismatch fold to NULL
-    distances) sort by bare index and land in cells [0..n_assign-1],
-    extending the single-assign cell-0 convention. Map-only, narrow.
-    """
-    if n_assign < 1:
-        raise ValueError(
-            f"ivf_assign_multi: n_assign must be >= 1, got {n_assign}"
-        )
-    dists = [
-        F.struct(
-            (_norm2_diff(F.col(vec_col), c)).alias("d"),
-            F.lit(i).alias("i"),
-        )
-        for i, c in enumerate(centroids)
-    ]
-    ordered = F.slice(F.array_sort(F.array(*dists)), 1, n_assign)
-    return df.withColumn(
-        out_col, F.transform(ordered, lambda s: s["i"])
-    )
-
-
-def ivf_assign_table_multi(
-    df: DataFrame, *, vec_col: str, centroids, n_assign: int = 2,
-    out_col: str = "cells",
-    centroid_id_col: str = "cell", centroid_vec_col: str | None = None,
-) -> DataFrame:
-    """`ivf_assign_multi` with the centroids as DATA — the
-    `ivf_assign_table` scale lever applied to the n-nearest form: the
-    (k x dim) float64 matrix rides the closure into an Arrow-batched
-    kernel, so k can track corpus size (the n/k ~ 2k balance rule)
-    while each row still gets its `n_assign` nearest cell ids.
-
-    BIT-IDENTICAL to `ivf_assign_multi`: the squared-L2 accumulation
-    is dimension-SEQUENTIAL (the exact float left fold of the literal
-    form) and the top-n order is a STABLE argsort — equal distances
-    keep ascending centroid index, the (d, i) struct-sort tie rule.
-    Degenerate rows land in cells [0..n_assign-1] like the literal
-    form. Map-only (no shuffle, pipelines into the scan)."""
+    Same centroid forms, kernel and row blocks as `ivf_assign`; the
+    top-n order is a STABLE argsort, so equal distances keep
+    ascending centroid index. Degenerate rows land in cells
+    [0..n_assign-1], extending the single-assign cell-0 convention.
+    Map-only, narrow."""
     import numpy as np
 
     if n_assign < 1:
         raise ValueError(
-            f"ivf_assign_table_multi: n_assign must be >= 1, "
-            f"got {n_assign}"
+            f"ivf_assign_multi: n_assign must be >= 1, got {n_assign}"
         )
     C = _centroid_matrix(centroids,
                          centroid_id_col=centroid_id_col,
                          centroid_vec_col=centroid_vec_col or vec_col,
-                         caller="ivf_assign_table_multi")
-    k, dim = C.shape
+                         caller="ivf_assign_multi")
+    k = C.shape[0]
     n_top = min(int(n_assign), k)
-    default = list(range(n_top))
+    rows = max(1, _ASSIGN_BLOCK_CELLS // k)
 
     @pandas_udf("array<int>")
     def _assign_n(v: pd.Series) -> pd.Series:
-        vals = [list(default)] * len(v)
-        ok = v.apply(lambda x: x is not None and len(x) == dim)
-        hit = np.nonzero(ok.to_numpy())[0]
-        if len(hit):
-            V = np.array([[float(x) for x in vec] for vec in v.iloc[hit]],
-                         dtype=np.float64)
-            d2 = np.zeros((V.shape[0], k))
-            for j in range(dim):
-                diff = V[:, j:j + 1] - C[None, :, j]
-                d2 += diff * diff
-            idx = np.argsort(d2, axis=1, kind="stable")[:, :n_top]
-            for pos, row in zip(hit, idx):
-                vals[pos] = row.astype("int32").tolist()
-        return pd.Series(vals, dtype="object")
+        out = np.tile(np.arange(n_top, dtype=np.int32), (len(v), 1))
+        for pos, d2 in _sq_dist_blocks(v, C, rows):
+            out[pos] = np.argsort(d2, axis=1, kind="stable")[:, :n_top]
+        return pd.Series(list(out))
 
     return df.withColumn(out_col, _assign_n(F.col(vec_col)))
-
-
-def _assign_cells_multi(df, *, vec_col, centroids, assign, n_assign,
-                        caller):
-    """(cells array, primary cell) assignment shared by the
-    n_assign-aware SemDeDup surfaces: `cells` = the n nearest cell
-    ids, `cell` = cells[0] (exactly the single-assign cell, so the
-    labeled output schema is unchanged)."""
-    if assign == "table":
-        out = ivf_assign_table_multi(
-            df, vec_col=vec_col, centroids=centroids, n_assign=n_assign
-        )
-    elif assign == "literal":
-        out = ivf_assign_multi(
-            df, vec_col=vec_col, centroids=centroids, n_assign=n_assign
-        )
-    else:
-        raise ValueError(
-            f"{caller}: assign must be 'literal' or 'table', "
-            f"got {assign!r}"
-        )
-    return out.withColumn("cell", F.col("cells")[0])
 
 
 def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
@@ -1268,7 +1169,6 @@ def contrastive_triplets_by_cell(
     pos_threshold: float = 0.95,
     k_neg: int = 2,
     cell_cap: int | None = None,
-    assign: str = "literal",
 ) -> DataFrame:
     """`contrastive_triplets` mined inside IVF cells — the form that
     survives corpora where anchors stop being driver-bounded: the
@@ -1294,8 +1194,7 @@ def contrastive_triplets_by_cell(
     `cell_cap` skips BOTH pair mining and negative mining inside
     cells larger than the cap (the semantic_dedup skew guard — a
     degenerate quantizer cell would otherwise go quadratic twice).
-    `assign="table"` routes the cell assignment through
-    `ivf_assign_table` (bit-identical; k can track corpus size).
+    `centroids` takes any `ivf_assign` form.
 
     Scale shape: one cell-keyed shuffle feeds pair mining and
     negative scoring; candidate volume is O(sum cell_size^2),
@@ -1308,15 +1207,10 @@ def contrastive_triplets_by_cell(
             f"contrastive_triplets_by_cell: k_neg must be >= 1, "
             f"got {k_neg}"
         )
-    if assign == "table":
-        cells = ivf_assign_table(df, vec_col=vec_col, centroids=centroids)
-    elif assign == "literal":
-        cells = ivf_assign(df, vec_col=vec_col, centroids=centroids)
-    else:
-        raise ValueError(
-            f"contrastive_triplets_by_cell: assign must be 'literal' "
-            f"or 'table', got {assign!r}"
-        )
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
+                         centroid_vec_col=vec_col,
+                         caller="contrastive_triplets_by_cell")
+    cells = ivf_assign(df, vec_col=vec_col, centroids=C)
     base = cells.select(
         F.col("cell"), F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"), _norm(F.col(vec_col)).alias("_n"),
@@ -1454,7 +1348,6 @@ def semantic_dedup_apply(
     centroids,
     reps: DataFrame,
     threshold: float = 0.95,
-    assign: str = "literal",
     broadcast_reps: bool | str = "auto",
     broadcast_reps_cap: int = 100_000,
 ) -> DataFrame:
@@ -1482,8 +1375,9 @@ def semantic_dedup_apply(
     all arrived rows; `streaming/pipeline.py semantic_dedup_stream`
     wraps it) and the batch oracle gates it verbatim.
 
-    Scale shape: cell assignment is the narrow argmin (literal or
-    `assign="table"` for large k); the reps join is cell-keyed. HOW
+    Scale shape: cell assignment is the narrow `ivf_assign` argmin
+    (`centroids` takes any of its forms); the reps join is
+    cell-keyed. HOW
     MANY reps there are depends on the corpus: SemDeDup keeps one
     row per CLUSTER, and on a low-duplication reference most docs
     are singletons — kept reps ~ reference size, NOT a small set.
@@ -1505,15 +1399,10 @@ def semantic_dedup_apply(
     The groupBy key is the doc id over the (doc x cell-local reps)
     candidates, map-side combinable either way.
     """
-    if assign == "table":
-        cells = ivf_assign_table(df, vec_col=vec_col, centroids=centroids)
-    elif assign == "literal":
-        cells = ivf_assign(df, vec_col=vec_col, centroids=centroids)
-    else:
-        raise ValueError(
-            f"semantic_dedup_apply: assign must be 'literal' or "
-            f"'table', got {assign!r}"
-        )
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
+                         centroid_vec_col=vec_col,
+                         caller="semantic_dedup_apply")
+    cells = ivf_assign(df, vec_col=vec_col, centroids=C)
     # norms are precomputed ONCE per row on each side of the cell
     # join (r16 optimization round): the per-candidate expression
     # then folds only the dot product — float-identical to inline
@@ -1641,20 +1530,22 @@ def kmeans_refine_centroids(
     df: DataFrame,
     *,
     vec_col: str,
-    centroids: list[list[float]],
+    centroids,
     n_iter: int = 5,
     tol: float = 1e-6,
     order_col: str | None = None,
 ) -> list[list[float]]:
     """Lloyd's k-means refinement of IVF centroids: per round, (1)
-    narrow argmin assignment against the current literal centroids,
-    (2) element-wise mean per cell via posexplode + (cell, dim)-keyed
+    map-only `ivf_assign` against the current centroid matrix, (2)
+    element-wise mean per cell via posexplode + (cell, dim)-keyed
     avg — map-side partial aggregation means the shuffle carries at
     most k x dim rows per map task, and only the k x dim cell means
-    reach the driver (same bounded driver-state pattern as the literal
-    centroid arrays themselves). Empty cells keep their previous
-    centroid. Stops early when the max squared centroid shift drops
-    below `tol`.
+    reach the driver. Empty cells keep their previous centroid. Stops
+    early when the max squared centroid shift drops below `tol`.
+    `centroids` (the init) takes any `ivf_assign` form — a list, a
+    numpy matrix or a 0..k-1-keyed (cell, vector) DataFrame — so k
+    can be trained in the tens of thousands: one map-only pass plus a
+    (k x dim)-row mean shuffle per round.
 
     At 100 TB: train on a sample (`df.sample(...)`) — the quantizer
     needs distribution shape, not every row; assignment of the full
@@ -1667,62 +1558,20 @@ def kmeans_refine_centroids(
     therefore oracle-checkable). Costs a collect_list per (cell, dim)
     group — bounded by cell size, so sample-scale training only.
     """
-    return _lloyd_loop(
-        df, vec_col=vec_col, centroids=centroids, n_iter=n_iter,
-        tol=tol, order_col=order_col,
-        assign_fn=lambda d, cents: ivf_assign(
-            d, vec_col=vec_col, centroids=cents
-        ),
-    )
-
-
-def kmeans_train_table(
-    df: DataFrame,
-    *,
-    vec_col: str,
-    init_centroids,
-    n_iter: int = 5,
-    tol: float = 1e-6,
-    order_col: str | None = None,
-) -> list[list[float]]:
-    """Lloyd's k-means with the centroids handled as a MATRIX end to
-    end — the offline quantizer-training path for k past the literal
-    expression tree's ~hundreds ceiling (the r11 verdict's missing
-    primitive, closing the loop `ivf_assign_table` opened): each
-    round assigns via the broadcast numpy argmin kernel instead of k
-    inlined aggregate folds, so training k in the tens of thousands
-    is one map-only pass + a (k x dim)-row mean shuffle per round.
-
-    `init_centroids` accepts everything `ivf_assign_table` does
-    (list / numpy matrix / 0..k-1-keyed DataFrame). The mean update,
-    empty-cell rule, tol early-stop and `order_col` bit-determinism
-    contract are IDENTICAL to `kmeans_refine_centroids` — and the
-    assignment kernel is bit-identical to the literal argmin — so
-    given the same init this returns the exact same centroids
-    (pinned in tests/test_round12_ops.py), and the kmeans IVF oracle
-    gates pipelines trained through either path.
-
-    At 100 TB: train on a sample (the quantizer needs distribution
-    shape, not every row), then `ivf_assign_table` the full corpus
-    once and write partitionBy(cell).
-    """
-    C = _centroid_matrix(init_centroids, centroid_id_col="cell",
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
                          centroid_vec_col=vec_col,
-                         caller="kmeans_train_table")
+                         caller="kmeans_refine_centroids")
     return _lloyd_loop(
         df, vec_col=vec_col, centroids=C.tolist(), n_iter=n_iter,
         tol=tol, order_col=order_col,
-        assign_fn=lambda d, cents: ivf_assign_table(
-            d, vec_col=vec_col, centroids=cents
-        ),
     )
 
 
-def _lloyd_loop(df, *, vec_col, centroids, n_iter, tol, order_col,
-                assign_fn) -> list[list[float]]:
+def _lloyd_loop(df, *, vec_col, centroids, n_iter, tol,
+                order_col) -> list[list[float]]:
     cents = [[float(x) for x in c] for c in centroids]
     for _ in range(n_iter):
-        assigned = assign_fn(df, cents)
+        assigned = ivf_assign(df, vec_col=vec_col, centroids=cents)
         exploded = assigned.select(
             *([order_col] if order_col else []),
             "cell", F.posexplode(F.col(vec_col)).alias("pos", "_x"),
@@ -2124,7 +1973,6 @@ def knn_ivf_pq(
     df: DataFrame, *, id_col: str, vec_col: str, query: list[float],
     centroids, codebooks: list[list[list[float]]],
     n_probes: int = 2, k: int = 10, rerank: int | None = None,
-    assign: str = "literal",
 ) -> DataFrame:
     """IVF-PQ ANN top-k — the production large-scale ANN layout
     (Faiss's default at billion scale), composed from the two proven
@@ -2139,37 +1987,26 @@ def knn_ivf_pq(
     shortlist.
 
     Same output contract as `knn_pq_adc` ((id, [l2_dist,] adc_dist,
-    pq_code, rank)); fully deterministic (literal centroids/codebooks,
+    pq_code, rank)); fully deterministic (fixed centroids/codebooks,
     id tie-breaks), so the DuckDB twin chains the IVF cell CTE with
     the ADC LUT arithmetic verbatim.
     """
     if n_probes < 1:
         raise ValueError(f"knn_ivf_pq: n_probes must be >= 1, got {n_probes}")
-    if not isinstance(centroids, DataFrame) and len(centroids) == 0:
-        raise ValueError("knn_ivf_pq: centroids must be non-empty")
     if not codebooks:
         raise ValueError("knn_ivf_pq: codebooks must be non-empty")
 
     def _l2(a, b):
         return sum((x - y) ** 2 for x, y in zip(a, b))
 
-    if assign == "table":
-        # same driver arithmetic over the coerced matrix; corpus
-        # assignment through the bit-identical numpy kernel (see
-        # knn_ivf) — the large-k IVF-PQ layout
-        cents_list = _centroid_matrix(
-            centroids, centroid_id_col="cell", centroid_vec_col=vec_col,
-            caller="knn_ivf_pq",
-        ).tolist()
-        centroids = cents_list  # skip re-coercion in the assign (knn_ivf)
-    else:
-        cents_list = centroids
+    C = _centroid_matrix(centroids, centroid_id_col="cell",
+                         centroid_vec_col=vec_col, caller="knn_ivf_pq")
+    cents_list = C.tolist()
     order = sorted(
         range(len(cents_list)), key=lambda i: (_l2(query, cents_list[i]), i)
     )
     probe = order[:n_probes]
-    assigned = _assign_cells(df, vec_col=vec_col, centroids=centroids,
-                             assign=assign, caller="knn_ivf_pq")
+    assigned = ivf_assign(df, vec_col=vec_col, centroids=C)
     cand = assigned.where(F.col("cell").isin(probe)).drop("cell")
     return knn_pq_adc(
         cand, id_col=id_col, vec_col=vec_col, query=query,

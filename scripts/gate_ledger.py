@@ -128,32 +128,39 @@ def update_ledger() -> tuple[dict, list[str]]:
     return ledger, stale
 
 
-def rotation_table() -> str:
-    """Markdown summary of gate-rotation health for README: how many
-    registry entries ride on which snapshot, and where the window sits."""
+def window_rows() -> list[tuple[str, str, int]]:
+    """(position, reason, entries) runs of the `queries()` order, each
+    entry labeled by the `gate_key` tier that places it: "new or
+    changed (must gate)", "rows-only" or "ledger rN" — read from
+    GATE_LEDGER.json and the current fingerprints, as the order is."""
     sys.path.insert(0, REPO)
     import __spark_entry__ as m
 
-    order = list(m.queries())
-    greens = green_rounds()
-    newest = max(r for r, _ in snapshots())
-    lines = [
-        "| position | entries | latest green record |",
-        "|---|---|---|",
-    ]
-    buckets: dict[tuple[bool, object], int] = {}
-    for pos, q in enumerate(order):
-        key = (pos < 50, greens.get(q))
-        buckets[key] = buckets.get(key, 0) + 1
-    for (in_win, rnd), n in sorted(
-        buckets.items(), key=lambda kv: (not kv[0][0], str(kv[0][1]))
-    ):
-        where = "1-50 (gated this round)" if in_win else ">50 (rides ledger)"
-        rec = f"r{rnd}" if rnd is not None else "none (must gate)"
-        lines.append(f"| {where} | {n} | {rec} |")
+    ledger = load_ledger()
+    fps = current_fingerprints()
+    rows: list[tuple[str, str, int]] = []
+    for pos, q in enumerate(m.queries()):
+        tier, rnd, _ = m.gate_key(q, ledger, fps, m.ROWS_ONLY_BY_DESIGN)
+        reason = ("new or changed (must gate)", "rows-only",
+                  f"ledger r{rnd}")[tier]
+        where = "1-50 (gated this round)" if pos < 50 else ">50 (rides ledger)"
+        if rows and rows[-1][:2] == (where, reason):
+            rows[-1] = (where, reason, rows[-1][2] + 1)
+        else:
+            rows.append((where, reason, 1))
+    return rows
+
+
+def rotation_table() -> str:
+    """Markdown summary of the gate window for README, in gate order:
+    how many entries sit in each position range, and why there."""
+    rows = window_rows()
+    lines = ["| position | entries | why there |", "|---|---|---|"]
+    lines += [f"| {where} | {n} | {reason} |" for where, reason, n in rows]
     lines.append(
-        f"\n({len(order)} registered; newest snapshot r{newest}; "
-        "regenerate with `python scripts/gate_ledger.py --table`)"
+        f"\n({sum(n for _, _, n in rows)} registered; order from "
+        "GATE_LEDGER.json; regenerate with "
+        "`python scripts/gate_ledger.py --table`)"
     )
     return "\n".join(lines)
 

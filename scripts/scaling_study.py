@@ -516,10 +516,10 @@ def emb_ops():
     def semdedup_ktracked(d, vectorized=False):
         # r12: k TRACKS the corpus per the paper's n/k ~ 2k balance
         # rule (k = sqrt(n/2): 32/100/200 cells at 2k/20k/80k
-        # vectors) — executable only via the centroid-TABLE assign;
-        # the literal argmin's expression tree made k > ~hundreds
-        # unplannable, which is why the r11 study had to hold k=64
-        # fixed and measured the quadratic. Expected shape: pairs
+        # vectors) — executable only with the broadcast-matrix
+        # ivf_assign kernel; the literal argmin it replaced made
+        # k > ~hundreds unplannable, which is why the r11 study had to
+        # hold k=64 fixed and measured the quadratic. Expected shape: pairs
         # = n * (n/2k) with k ∝ sqrt(n) -> n^1.5, vs the fixed-k n^2.
         import math
 
@@ -533,8 +533,7 @@ def emb_ops():
         )
         return semantic_dedup(
             d, id_col="vec_id", vec_col="embedding", centroids=cents,
-            threshold=0.95, cell_cap=3000, assign="table",
-            vectorized=vectorized,
+            threshold=0.95, cell_cap=3000, vectorized=vectorized,
         )
 
     def contrastive_by_cell_study(d):
@@ -555,7 +554,7 @@ def emb_ops():
         )
         return contrastive_triplets_by_cell(
             d, id_col="vec_id", vec_col="embedding", centroids=cents,
-            pos_threshold=0.95, k_neg=2, cell_cap=3000, assign="table",
+            pos_threshold=0.95, k_neg=2, cell_cap=3000,
         )
 
     def semdedup_multi(d):
@@ -576,7 +575,7 @@ def emb_ops():
         )
         return semantic_dedup(
             d, id_col="vec_id", vec_col="embedding", centroids=cents,
-            threshold=0.95, cell_cap=3000, assign="table",
+            threshold=0.95, cell_cap=3000,
             vectorized=True, n_assign=2,
         )
 

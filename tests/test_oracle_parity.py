@@ -284,3 +284,35 @@ def test_gate_order_rule_on_synthetic_ledger():
         if q not in ledger or ledger[q]["fingerprint"] != fps[q]
     ]
     assert must_gate_past_horizon == ["new-50"]
+
+
+def test_gate_ledger_table_follows_gate_order():
+    """`gate_ledger.py --table` counts every registered entry once,
+    and its must-gate row is exactly the head `gate_order` puts first:
+    the entries before the first rows-only resident or unchanged
+    ledger record."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(__file__), "..", "scripts")
+    )
+    import gate_ledger
+
+    rows = gate_ledger.window_rows()
+    order = list(entrymod.queries())
+    assert sum(n for _, _, n in rows) == len(order)
+    must_gate = sum(
+        n for _, reason, n in rows
+        if reason == "new or changed (must gate)"
+    )
+    ledger = gate_ledger.load_ledger()
+    fps = gate_ledger.current_fingerprints()
+    head = 0
+    for q in order:
+        if q in entrymod.ROWS_ONLY_BY_DESIGN or (
+            q in ledger and ledger[q]["fingerprint"] == fps[q]
+        ):
+            break
+        head += 1
+    assert must_gate == head

@@ -684,19 +684,19 @@ def test_embedding_lsh_pairs_is_bucket_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ivf_assign_table_is_map_only(spark):
-    # The table assign must pipeline into the scan: no Exchange, no
+def test_ivf_assign_is_map_only(spark):
+    # The IVF assignment must pipeline into the scan: no Exchange, no
     # join — one ArrowEvalPython projection over the parquet read.
     from awskinesisconsumer_spark.io import load_table
     from awskinesisconsumer_spark.operators.similarity import (
-        ivf_assign_table, ivf_centroids_from_sample,
+        ivf_assign, ivf_centroids_from_sample,
     )
 
     emb = load_table(spark, "embeddings", SF)
     cents = ivf_centroids_from_sample(
         emb, id_col="vec_id", vec_col="embedding", n_centroids=8
     )
-    plan = _plan(ivf_assign_table(
+    plan = _plan(ivf_assign(
         emb, vec_col="embedding", centroids=cents
     ))
     assert "Exchange" not in plan

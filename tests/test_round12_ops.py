@@ -1,8 +1,7 @@
-"""Round-12 operator tests: the r11 verdict's two scale levers —
-`ivf_assign_table` (centroid-TABLE assign, bit-identical to the
-literal argmin, unblocking SemDeDup's n/k ~ 2k rule) and
-`contrastive_triplets_by_cell` (cell-local mining, no driver anchor
-collection) — the frozen-SemDeDup streaming split
+"""Round-12 operator tests: `contrastive_triplets_by_cell` (the r11
+verdict's cell-local mining, no driver anchor collection; the IVF
+assignment kernel's tests live in tests/test_similarity.py) — the
+frozen-SemDeDup streaming split
 (`semantic_dedup_apply` / `semantic_dedup_stream`), and the four r11
 ADVICE regression pins (budget_select NaN priorities, token-quota /
 pack-sequences negative-token algebra, the standalone simhash
@@ -20,8 +19,6 @@ from awskinesisconsumer_spark.io import load_table
 from awskinesisconsumer_spark.operators.similarity import (
     contrastive_triplets,
     contrastive_triplets_by_cell,
-    ivf_assign,
-    ivf_assign_table,
     ivf_centroids_from_sample,
     semantic_dedup,
     semantic_dedup_apply,
@@ -71,99 +68,6 @@ def _cmp(sdf, con, sql, float_cols=()):
         f"duck-only: {[r for r in drows if r not in set(srows)][:2]}"
     )
     return len(srows)
-
-
-# ---- ivf_assign_table: the SemDeDup scale lever ---------------------
-
-def test_ivf_assign_table_equals_literal_on_fixture(spark):
-    emb = load_table(spark, "embeddings", SF)
-    cents = ivf_centroids_from_sample(
-        emb, id_col="vec_id", vec_col="embedding", n_centroids=8
-    )
-    lit = ivf_assign(emb, vec_col="embedding", centroids=cents)
-    tab = ivf_assign_table(emb, vec_col="embedding", centroids=cents)
-    cols = ["vec_id", "cell"]
-    assert sorted(map(tuple, lit.select(cols).collect())) == sorted(
-        map(tuple, tab.select(cols).collect())
-    )
-
-
-def test_ivf_assign_table_degenerate_rows_match_literal(spark):
-    # NULL vectors, dim-mismatched vectors (zip_with pads with NULL ->
-    # NULL distance), and NaN elements all collapse to cell 0 on the
-    # literal path (NULL/NaN distance structs sort first in the
-    # array_min); the kernel pins the same collapse.
-    df = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, None), (3, [0.0, 0.0]), (4, [5.0]),
-         (5, [float("nan"), 1.0]), (6, [3.9, 3.9])],
-        "id long, v array<double>",
-    )
-    cents = [[1.0, 1.0], [4.0, 4.0], [0.1, 0.1]]
-    lit = {(r["id"], r["cell"]) for r in
-           ivf_assign(df, vec_col="v", centroids=cents).collect()}
-    tab = {(r["id"], r["cell"]) for r in
-           ivf_assign_table(df, vec_col="v", centroids=cents).collect()}
-    assert lit == tab
-    assert (2, 0) in tab and (4, 0) in tab and (5, 0) in tab
-    assert (6, 1) in tab  # a real assignment, not everything-zero
-
-
-def test_ivf_assign_table_accepts_centroid_dataframe(spark):
-    emb = load_table(spark, "embeddings", SF)
-    cents = ivf_centroids_from_sample(
-        emb, id_col="vec_id", vec_col="embedding", n_centroids=4
-    )
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "cell int, embedding array<double>",
-    )
-    from_list = ivf_assign_table(
-        emb, vec_col="embedding", centroids=cents
-    )
-    from_df = ivf_assign_table(
-        emb, vec_col="embedding", centroids=cdf,
-        centroid_vec_col="embedding",
-    )
-    cols = ["vec_id", "cell"]
-    assert sorted(map(tuple, from_list.select(cols).collect())) == sorted(
-        map(tuple, from_df.select(cols).collect())
-    )
-
-
-def test_ivf_assign_table_validates(spark):
-    emb = load_table(spark, "embeddings", SF)
-    bad_ids = spark.createDataFrame(
-        [(1, [0.0] * 64), (3, [1.0] * 64)],
-        "cell int, embedding array<double>",
-    )
-    with pytest.raises(ValueError, match="ids must be exactly"):
-        ivf_assign_table(emb, vec_col="embedding", centroids=bad_ids)
-    with pytest.raises(ValueError, match=r"\(k, dim\)"):
-        ivf_assign_table(emb, vec_col="embedding", centroids=[])
-
-
-def test_semantic_dedup_table_assign_bit_identical(spark):
-    # The verdict's done-criterion: equality vs the literal path on
-    # the gate fixture — same cells, same clusters, same kept flags.
-    emb = load_table(spark, "embeddings", SF)
-    cents = ivf_centroids_from_sample(
-        emb, id_col="vec_id", vec_col="embedding", n_centroids=8
-    )
-    lit = semantic_dedup(
-        emb, id_col="vec_id", vec_col="embedding",
-        centroids=cents, threshold=0.3,
-    )
-    tab = semantic_dedup(
-        emb, id_col="vec_id", vec_col="embedding",
-        centroids=cents, threshold=0.3, assign="table",
-    )
-    cols = ["vec_id", "cell", "cluster_id", "kept"]
-    assert sorted(map(tuple, lit.select(cols).collect())) == sorted(
-        map(tuple, tab.select(cols).collect())
-    )
-    with pytest.raises(ValueError, match="assign must be"):
-        semantic_dedup(emb, id_col="vec_id", vec_col="embedding",
-                       centroids=cents, assign="nope")
 
 
 # ---- contrastive_triplets_by_cell -----------------------------------
@@ -528,30 +432,6 @@ def test_token_quota_and_pack_negative_tokens_match_batch(spark):
     }
 
 
-def test_kmeans_train_table_equals_refine(spark):
-    # Matrix-path Lloyd training must return the EXACT centroids the
-    # literal refinement returns given the same seed (same means,
-    # empty-cell rule, order_col fold; bit-identical assignment).
-    from awskinesisconsumer_spark.operators.similarity import (
-        kmeans_refine_centroids,
-        kmeans_train_table,
-    )
-
-    emb = load_table(spark, "embeddings", SF)
-    seed = ivf_centroids_from_sample(
-        emb, id_col="vec_id", vec_col="embedding", n_centroids=8
-    )
-    a = kmeans_refine_centroids(
-        emb, vec_col="embedding", centroids=seed, n_iter=3, tol=0.0,
-        order_col="vec_id",
-    )
-    b = kmeans_train_table(
-        emb, vec_col="embedding", init_centroids=seed, n_iter=3,
-        tol=0.0, order_col="vec_id",
-    )
-    assert a == b
-
-
 def test_semantic_near_dup_pairs_is_semantic_dedup_pair_table(spark):
     # The public pair surface must be exactly the pair table
     # semantic_dedup resolves: every pair joins two same-cluster,
@@ -605,50 +485,6 @@ def test_semantic_keep_best_oracle_parity(spark):
         assert len(kept) == 1
         best = min(members, key=lambda r: (-r["score"], r["vec_id"]))
         assert kept[0]["vec_id"] == best["vec_id"]
-
-
-def test_knn_ivf_table_assign_equals_literal(spark):
-    from awskinesisconsumer_spark.operators.similarity import knn_ivf
-
-    emb = load_table(spark, "embeddings", SF)
-    cents = ivf_centroids_from_sample(
-        emb, id_col="vec_id", vec_col="embedding", n_centroids=8
-    )
-    probe = [float(i % 13) / 13.0 for i in range(64)]
-    lit = knn_ivf(emb, id_col="vec_id", vec_col="embedding",
-                  query=probe, centroids=cents, n_probes=2, k=10)
-    tab = knn_ivf(emb, id_col="vec_id", vec_col="embedding",
-                  query=probe, centroids=cents, n_probes=2, k=10,
-                  assign="table")
-    assert sorted(map(tuple, lit.collect())) == sorted(
-        map(tuple, tab.collect())
-    )
-
-
-def test_knn_ivf_pq_table_assign_equals_literal(spark):
-    from awskinesisconsumer_spark.operators.similarity import (
-        knn_ivf_pq,
-        pq_codebooks_refined,
-    )
-
-    emb = load_table(spark, "embeddings", SF)
-    cents = ivf_centroids_from_sample(
-        emb, id_col="vec_id", vec_col="embedding", n_centroids=8
-    )
-    cbs = pq_codebooks_refined(
-        emb, id_col="vec_id", vec_col="embedding", m=8, ksub=16,
-        n_iter=1, order_col="vec_id",
-    )
-    probe = [float(i % 13) / 13.0 for i in range(64)]
-    lit = knn_ivf_pq(emb, id_col="vec_id", vec_col="embedding",
-                     query=probe, centroids=cents, codebooks=cbs,
-                     n_probes=2, k=5)
-    tab = knn_ivf_pq(emb, id_col="vec_id", vec_col="embedding",
-                     query=probe, centroids=cents, codebooks=cbs,
-                     n_probes=2, k=5, assign="table")
-    assert sorted(map(tuple, lit.collect())) == sorted(
-        map(tuple, tab.collect())
-    )
 
 
 def test_bench_coverage_rule():

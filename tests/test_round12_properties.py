@@ -11,9 +11,10 @@ from hypothesis import strategies as st
 
 
 def _assign_reference(vectors, centroids):
-    """The literal `ivf_assign` spec: per centroid, a LEFT FOLD over
-    dims of (v_j - c_j)^2 in python floats (the F.aggregate order),
-    then min over (distance, index) structs — first-min ties."""
+    """The `ivf_assign` spec in plain python: per centroid, a LEFT FOLD
+    over dims of (v_j - c_j)^2 in python floats (the F.aggregate and
+    DuckDB list_reduce order), then min over (distance, index) —
+    first-min ties."""
     out = []
     for v in vectors:
         best, best_d = 0, None
@@ -27,17 +28,21 @@ def _assign_reference(vectors, centroids):
     return out
 
 
-def _assign_kernel(vectors, centroids):
-    """The `ivf_assign_table` numpy kernel verbatim: dim-SEQUENTIAL
-    accumulation (vectorized over rows/centroids, one dim's term
-    added per step), np.argmin first-min ties."""
-    V = np.array(vectors, dtype=np.float64)
+def _assign_kernel(vectors, centroids, rows):
+    """The `ivf_assign` kernel body on the driver: `_sq_dist_blocks`
+    in blocks of `rows` vectors, np.argmin first-min ties."""
+    import pandas as pd
+
+    from awskinesisconsumer_spark.operators.similarity import (
+        _sq_dist_blocks,
+    )
+
+    out = [0] * len(vectors)
     C = np.array(centroids, dtype=np.float64)
-    d2 = np.zeros((V.shape[0], C.shape[0]))
-    for j in range(V.shape[1]):
-        diff = V[:, j:j + 1] - C[None, :, j]
-        d2 += diff * diff
-    return [int(x) for x in d2.argmin(axis=1)]
+    for pos, d2 in _sq_dist_blocks(pd.Series(vectors), C, rows):
+        for p, cell in zip(pos, d2.argmin(axis=1)):
+            out[p] = int(cell)
+    return out
 
 
 _vals = st.floats(min_value=-1e6, max_value=1e6,
@@ -60,7 +65,8 @@ def test_ivf_assign_kernel_bit_equals_literal_fold(data):
         st.lists(_vals, min_size=dim, max_size=dim),
         min_size=1, max_size=20,
     ))
-    assert _assign_kernel(vectors, centroids) == _assign_reference(
+    rows = data.draw(st.integers(1, 4))
+    assert _assign_kernel(vectors, centroids, rows) == _assign_reference(
         vectors, centroids
     )
 

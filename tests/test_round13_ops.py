@@ -35,9 +35,7 @@ def test_centroid_matrix_guard_fires_before_collect(spark, monkeypatch):
     # the old code collected first and guarded after).
     import pyspark.sql.dataframe as dfmod
 
-    from awskinesisconsumer_spark.operators.similarity import (
-        ivf_assign_table,
-    )
+    from awskinesisconsumer_spark.operators.similarity import ivf_assign
 
     big = spark.range(60_000).select(
         F.col("id").alias("cell"),
@@ -57,7 +55,7 @@ def test_centroid_matrix_guard_fires_before_collect(spark, monkeypatch):
 
     monkeypatch.setattr(dfmod.DataFrame, "collect", guarded_collect)
     with pytest.raises(ValueError, match="5e7"):
-        ivf_assign_table(
+        ivf_assign(
             probe, vec_col="embedding", centroids=big,
             centroid_vec_col="vector",
         )
@@ -69,7 +67,7 @@ def test_centroid_matrix_guard_fires_before_collect(spark, monkeypatch):
         .otherwise(F.array_repeat(F.lit(0.0), 1000)).alias("vector"),
     )
     with pytest.raises(ValueError, match="5e7"):
-        ivf_assign_table(
+        ivf_assign(
             probe, vec_col="embedding", centroids=mixed,
             centroid_vec_col="vector",
         )
@@ -158,52 +156,6 @@ def _emb_cents(spark):
         emb, id_col="vec_id", vec_col="embedding", n_centroids=8
     )
     return emb, cents
-
-
-def test_ivf_assign_multi_forms_bit_identical(spark, _emb_cents):
-    # literal expression form == table kernel form, element by
-    # element (the ivf_assign/ivf_assign_table contract extended to
-    # top-n: dim-sequential fold, stable ties to the lowest index);
-    # index 0 == the single-assign cell.
-    from awskinesisconsumer_spark.operators.similarity import (
-        ivf_assign, ivf_assign_multi, ivf_assign_table_multi,
-    )
-
-    emb, cents = _emb_cents
-    lit = {r["vec_id"]: list(r["cells"]) for r in ivf_assign_multi(
-        emb, vec_col="embedding", centroids=cents, n_assign=3
-    ).collect()}
-    tab = {r["vec_id"]: list(r["cells"]) for r in ivf_assign_table_multi(
-        emb, vec_col="embedding", centroids=cents, n_assign=3
-    ).collect()}
-    assert lit == tab
-    single = {r["vec_id"]: r["cell"] for r in ivf_assign(
-        emb, vec_col="embedding", centroids=cents
-    ).collect()}
-    assert all(v[0] == single[k] for k, v in lit.items())
-    assert all(len(set(v)) == 3 for v in lit.values())
-
-
-def test_ivf_assign_multi_degenerate_rows(spark):
-    # NULL vectors and dim-mismatched vectors land in cells
-    # [0..n-1] in BOTH forms (the single-assign cell-0 convention
-    # extended).
-    from awskinesisconsumer_spark.operators.similarity import (
-        ivf_assign_multi, ivf_assign_table_multi,
-    )
-
-    df = spark.createDataFrame(
-        [(0, None), (1, [1.0]), (2, [9.0, 9.0])],
-        "id long, v array<double>",
-    )
-    cents = [[0.0, 0.0], [1.0, 1.0], [8.0, 8.0]]
-    for fn in (ivf_assign_multi, ivf_assign_table_multi):
-        got = {r["id"]: list(r["cells"]) for r in fn(
-            df, vec_col="v", centroids=cents, n_assign=2
-        ).collect()}
-        assert got[0] == [0, 1], fn.__name__
-        assert got[1] == [0, 1], fn.__name__
-        assert got[2] == [2, 1], fn.__name__
 
 
 def test_semantic_multi_pairs_superset(spark, _emb_cents):
