@@ -77,8 +77,10 @@ def _resolve_vectorized(df: DataFrame, id_col: str,
     auto may only pick it when that regime is provably bounded:
 
     * `cell_cap` is set (the enforcement the semantic_dedup
-      docstring names: capped cells are excluded from the mine, so
-      no task sees more than cell_cap rows) and at most
+      docstring names: no capped cell is scored, so no score matrix
+      exceeds cell_cap^2 — the pair mine drops capped cells before
+      the groupBy, `_cell_labels` receives one whole but keeps its
+      rows as singletons, memory linear in the cell) and at most
       `_MAX_KERNEL_CELL`, so its cell_cap^2 x 8-byte matrix is no
       larger than the worst case the size gate below admits; a
       larger cap proves nothing and falls through to that gate, or
@@ -447,6 +449,13 @@ def semantic_dedup(
     Returns (id, cell, cluster_id, kept): every input row labeled,
     exactly one kept row per duplicate cluster, singletons kept.
 
+    `id_col` is a KEY: the labels are exact for ids that are unique,
+    or duplicated only within one cell. The n_assign=1 kernel path
+    resolves components per cell, so an id that lands in two cells
+    (two rows with the same id and different vectors) no longer joins
+    the two cells' components through that id, as the global
+    pair-table resolution of the other paths does.
+
     `cell_cap` (optional) skips pair generation inside cells larger
     than the cap — the `hot_cap` skew guard for a degenerate
     quantizer (one centroid capturing a constant-embedding blob
@@ -480,10 +489,15 @@ def semantic_dedup(
     Scale shape: assignment is the `ivf_assign` argmin (narrow,
     map-only; at 100 TB the corpus is written partitionBy(cell)
     once and this op reads cell-partitioned files with ZERO
-    shuffle); the pair join is a cell-keyed equi-join producing
-    O(sum cell_size^2) candidates — bounded by the quantizer's
-    balance, audited by `cell_cap`; the component resolution runs
-    on the near-dup pair table (rare by construction), never the
+    shuffle); pair scoring is cell-local, O(sum cell_size^2) —
+    bounded by the quantizer's balance, audited by `cell_cap`. At
+    n_assign=1 on the numpy kernel every near-dup pair, and so every
+    component, lies inside one cell: the clusters resolve inside the
+    cell's own applyInPandas group (`_cell_labels`), one shuffle and
+    no Spark job per label-propagation round, and `cell_cap` is an
+    in-group row count. The HOF path and n_assign > 1 mine the pair
+    table and resolve it with `dedup.connected_components`, which
+    runs on the near-dup pairs (rare by construction), never the
     corpus.
 
     `centroids` takes any `ivf_assign` form: a list, a numpy matrix
@@ -512,6 +526,14 @@ def semantic_dedup(
 
     C = _centroid_matrix(centroids, centroid_id_col="cell",
                          centroid_vec_col=vec_col, caller="semantic_dedup")
+    if n_assign == 1:
+        base = ivf_assign(df, vec_col=vec_col, centroids=C).select(
+            F.col(id_col), F.col("cell"), F.col(vec_col)
+        )
+        if _resolve_vectorized(base, id_col, vectorized, cell_cap):
+            _check_cell_cap(cell_cap, "semantic_dedup")
+            return _cell_labels(base, id_col=id_col, vec_col=vec_col,
+                                threshold=threshold, cell_cap=cell_cap)
     base, pairs = _semantic_base_and_pairs(
         df, id_col=id_col, vec_col=vec_col, centroids=C,
         threshold=threshold, cell_cap=cell_cap, vectorized=vectorized,
@@ -845,6 +867,11 @@ def ivf_assign_multi(
     return df.withColumn(out_col, _assign_n(F.col(vec_col)))
 
 
+def _check_cell_cap(cell_cap, caller):
+    if cell_cap is not None and cell_cap < 1:
+        raise ValueError(f"{caller}: cell_cap must be >= 1, got {cell_cap}")
+
+
 def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
                 vectorized, caller, cap_base=None,
                 cap_widened=None, rank_col=None) -> DataFrame:
@@ -889,10 +916,7 @@ def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
     vectorized = _resolve_vectorized(base, id_col, vectorized, cell_cap)
     eligible = base
     if cell_cap is not None:
-        if cell_cap < 1:
-            raise ValueError(
-                f"{caller}: cell_cap must be >= 1, got {cell_cap}"
-            )
+        _check_cell_cap(cell_cap, caller)
         hot = (
             (cap_base if cap_base is not None else base)
             .groupBy("cell")
@@ -918,35 +942,14 @@ def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
         with_rank = rank_col is not None
 
         def cell_pairs(pdf):
-            pdf = (
-                pdf[pdf[vec_col].notna()]
-                .sort_values(id_col).reset_index(drop=True)
-            )
-            empty = {"id_a": pd.Series(dtype="int64"),
-                     "id_b": pd.Series(dtype="int64")}
-            if with_rank:
-                empty["_lev"] = pd.Series(dtype="int32")
-            if len(pdf) < 2:
-                return pd.DataFrame(empty)
-            m = np.array(
-                [[float(x) for x in v] for v in pdf[vec_col]],
-                dtype=np.float64,
-            )
-            sims = _np_fold_cosines(m, m)
-            ia, ib = np.nonzero(~np.isnan(sims) & (sims >= thr))
+            pdf, ia, ib = _cell_scored_pairs(pdf, id_col, vec_col, thr)
             ids = pdf[id_col].to_numpy()
-            # compare IDS, not positions (r16 ADVICE): after
-            # sort_values position order == id order only when ids
-            # are unique within the cell — a duplicated id would
-            # emit id_a == id_b self-pairs the HOF path's
-            # `id_a < id_b` filter excludes
-            keep = ids[ia] < ids[ib]
-            out = {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]]}
+            out = {"id_a": pd.Series(ids[ia], dtype="int64"),
+                   "id_b": pd.Series(ids[ib], dtype="int64")}
             if with_rank:
                 rk = pdf[rank_col].to_numpy()
-                out["_lev"] = np.maximum(
-                    rk[ia[keep]], rk[ib[keep]]
-                ).astype("int32")
+                out["_lev"] = pd.Series(
+                    np.maximum(rk[ia], rk[ib]), dtype="int32")
             return pd.DataFrame(out)
 
         schema = ("id_a long, id_b long, _lev int" if with_rank
@@ -1000,6 +1003,108 @@ def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
         else:
             pairs = pairs.select("id_a", "id_b")
     return pairs
+
+
+def _cell_scored_pairs(pdf, id_col, vec_col, threshold):
+    """The scoring rules of the per-cell numpy kernels (`_cell_pairs`'
+    pair mine and `_cell_labels`), in one place: drop NULL-vector
+    rows, sort by id, and score with `_np_fold_cosines` only pairs of
+    EQUAL-LENGTH vectors — the HOF rule, where `zip_with` pads a
+    shorter vector with NULLs and the fold yields a NULL cosine. A
+    NULL element arrives from Arrow as NaN and, like a zero norm,
+    gives a NaN cosine the threshold test drops. Returns (pdf, ia,
+    ib): the filtered, sorted group and the positions of its pairs
+    with cosine >= `threshold` and id_a < id_b."""
+    import numpy as np
+
+    pdf = (
+        pdf[pdf[vec_col].notna()]
+        .sort_values(id_col).reset_index(drop=True)
+    )
+    vecs = pdf[vec_col].to_numpy()
+    lens = np.fromiter((len(v) for v in vecs), dtype=np.int64,
+                       count=len(vecs))
+    ids = pdf[id_col].to_numpy()
+    ia_parts, ib_parts = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for dim in np.unique(lens):
+        pos = np.nonzero(lens == dim)[0]
+        if len(pos) < 2:
+            continue
+        m = np.stack(vecs[pos]).astype(np.float64)
+        sims = _np_fold_cosines(m, m)
+        ia, ib = np.nonzero(~np.isnan(sims) & (sims >= threshold))
+        ia, ib = pos[ia], pos[ib]
+        # compare IDS, not positions (r16 ADVICE): a duplicated id
+        # would otherwise emit id_a == id_b self-pairs the HOF path's
+        # `id_a < id_b` filter excludes
+        keep = ids[ia] < ids[ib]
+        ia_parts.append(ia[keep])
+        ib_parts.append(ib[keep])
+    return pdf, np.concatenate(ia_parts), np.concatenate(ib_parts)
+
+
+def _min_labels(n, u, v):
+    """Connected components of the graph on vertices 0..n-1 with edges
+    (u[i], v[i]): each vertex's label is the SMALLEST vertex of its
+    component. Min-label hooking plus pointer jumping, vectorized over
+    the edge arrays — no Python loop per edge. Every label is a vertex
+    of the same component and no larger than its own vertex; each
+    unconverged round hooks at least one root below itself, so the
+    root count falls until every edge joins equal labels, which is
+    then the component minimum."""
+    import numpy as np
+
+    lab = np.arange(n)
+    while True:
+        lu, lv = lab[u], lab[v]
+        if np.array_equal(lu, lv):
+            return lab
+        lo = np.minimum(lu, lv)
+        np.minimum.at(lab, lu, lo)
+        np.minimum.at(lab, lv, lo)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+
+
+def _cell_labels(base, *, id_col, vec_col, threshold, cell_cap):
+    """`semantic_dedup` at n_assign=1 on the numpy kernel: `base` is
+    (id, cell, vec), one row per input; returns (id, cell,
+    cluster_id, kept). Every near-dup pair lies inside one cell, so
+    every component does too, and one applyInPandas group per cell
+    scores its pairs (`_cell_scored_pairs`) and resolves them
+    (`_min_labels` over the cell's unique ids) — one shuffle, no
+    pair table and no label-propagation rounds. A cell with more
+    than `cell_cap` rows keeps every row as a singleton; rows with a
+    NULL id are dropped, as the id join of the pair-table path drops
+    them."""
+    import numpy as np
+    import pandas as pd
+
+    thr = float(threshold)
+
+    def label(pdf):
+        capped = cell_cap is not None and len(pdf) > cell_cap
+        pdf = pdf[pdf[id_col].notna()]
+        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        uniq, inv = np.unique(ids, return_inverse=True)
+        root = np.arange(len(uniq))
+        if not capped:
+            scored, ia, ib = _cell_scored_pairs(pdf, id_col, vec_col, thr)
+            sids = scored[id_col].to_numpy(dtype=np.int64)
+            root = _min_labels(len(uniq), np.searchsorted(uniq, sids[ia]),
+                               np.searchsorted(uniq, sids[ib]))
+        cluster = uniq[root[inv]]
+        return pd.DataFrame({
+            id_col: ids, "cell": pdf["cell"].to_numpy(dtype=np.int32),
+            "cluster_id": cluster, "kept": ids == cluster,
+        })
+
+    return base.groupBy("cell").applyInPandas(
+        label, f"{id_col} long, cell int, cluster_id long, kept boolean"
+    )
 
 
 def contrastive_triplets(

@@ -264,3 +264,138 @@ def test_semantic_dedup_apply_ignores_unrelated_rn_column(spark):
     assert plain[1] == (1.0, 100, True)
     assert math.isclose(plain[2][0], round(0.9 / math.sqrt(0.82), 6))
     assert plain[3] == (1.0, 101, True)
+
+
+def _pair_table_labels(df, *, centroids, threshold, cell_cap):
+    """The n_assign=1 pair-table + `connected_components` composition
+    `semantic_dedup` ran before it labeled inside the cell kernel:
+    kept as the oracle of `_cell_labels`."""
+    from awskinesisconsumer_spark.operators.dedup import connected_components
+
+    base, pairs = similarity._semantic_base_and_pairs(
+        df, id_col="id", vec_col="v", centroids=centroids,
+        threshold=threshold, cell_cap=cell_cap, vectorized=True,
+        n_assign=1, caller="oracle",
+    )
+    cc = connected_components(pairs, vertices=df.select("id"))
+    return (
+        base.join(cc.select("id", "cluster_id"), "id")
+        .withColumn("kept", F.col("id") == F.col("cluster_id"))
+        .select("id", "cell", "cluster_id", "kept")
+    )
+
+
+def _labels_fixture(seed):
+    """Seeded 4-dim rows: planted near-dup clusters among random
+    singletons, plus a NULL vector, ragged rows (two of them, equal
+    length, score with each other), a NULL element and an id
+    duplicated inside one cell."""
+    import random
+
+    rng = random.Random(seed)
+    rows, next_id = [], 1
+    for _ in range(12):
+        centre = [rng.gauss(0, 1) for _ in range(4)]
+        for _ in range(rng.choice([1, 1, 2, 3, 4])):
+            rows.append((next_id, [x + rng.gauss(0, 0.03) for x in centre]))
+            next_id += 1
+    rows += [(next_id, None), (next_id + 1, [1.0, 0.0]),
+             (next_id + 2, [1.0, 0.01]), (next_id + 3, [1.0, None, 0.0, 0.0])]
+    rows.append(rows[3])  # the same id and vector: the same cell
+    rng.shuffle(rows)
+    cents = [[rng.gauss(0, 1) for _ in range(4)] for _ in range(64)]
+    return rows, cents
+
+
+@pytest.mark.parametrize("threshold,cell_cap,k", [
+    (0.3, None, 4), (0.95, None, 4), (0.3, 8, 4), (0.95, None, 64),
+])
+def test_cell_labels_match_pair_table_components(spark, threshold,
+                                                 cell_cap, k):
+    rows, cents = _labels_fixture(seed=20 + k)
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
+    assert len(rows) < k or k == 4  # k = 64 leaves most cells empty
+    got = sorted(map(tuple, semantic_dedup(
+        df, id_col="id", vec_col="v", centroids=cents[:k],
+        threshold=threshold, cell_cap=cell_cap, vectorized=True,
+    ).collect()))
+    want = sorted(map(tuple, _pair_table_labels(
+        df, centroids=cents[:k], threshold=threshold, cell_cap=cell_cap,
+    ).collect()))
+    assert got == want
+    assert len(got) == len(rows)
+    assert any(not r[3] for r in got)  # near-dups merged
+    sizes = {}
+    for r in got:
+        sizes[r[1]] = sizes.get(r[1], 0) + 1
+    if cell_cap is not None:
+        assert max(sizes.values()) > cell_cap  # the cap fired
+
+
+def test_min_labels_match_union_find_reference():
+    # seeded random graphs against a plain Python union-find
+    import random
+
+    import numpy as np
+
+    rng = random.Random(7)
+    for n in (1, 2, 10, 200):
+        for n_edges in (0, n // 2, 3 * n):
+            u = np.array([rng.randrange(n) for _ in range(n_edges)], np.int64)
+            v = np.array([rng.randrange(n) for _ in range(n_edges)], np.int64)
+            parent = list(range(n))
+
+            def find(x):
+                while parent[x] != x:
+                    x = parent[x]
+                return x
+
+            for a, b in zip(u.tolist(), v.tolist()):
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+            want = [find(x) for x in range(n)]
+            assert similarity._min_labels(n, u, v).tolist() == want
+
+
+def test_semantic_dedup_kernel_issues_at_most_three_jobs(spark, emb_cents):
+    # the n_assign=1 kernel path labels inside one shuffle: no pair
+    # table, no label-propagation rounds (21 jobs before)
+    emb, cents, _ = emb_cents
+    sc = spark.sparkContext
+    group = "semantic-dedup-job-count"
+    sc.setJobGroup(group, "semantic_dedup job count")
+    try:
+        rows = semantic_dedup(
+            emb, id_col="vec_id", vec_col="embedding", centroids=cents,
+            threshold=0.95, vectorized=True,
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == emb.count()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_semantic_dedup_kernel_scores_ragged_vectors_like_hof(spark):
+    # a 2-dim row among 3-dim ones (and a NULL element) is unscorable
+    # on the HOF path; the kernel must label it, not fail the job
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.01]), (3, [1.0, 0.0]),
+         (4, [1.0, None, 0.0]), (5, [0.0, 1.0, 0.0])],
+        "id bigint, v array<double>",
+    )
+    kw = dict(id_col="id", vec_col="v", centroids=[[1.0, 0.0, 0.0]],
+              threshold=0.95)
+    hof, kernel = (
+        sorted(map(tuple, semantic_dedup(df, vectorized=vec, **kw)
+                   .collect()))
+        for vec in (False, True)
+    )
+    assert kernel == hof
+    assert (3, 0, 3, True) in kernel and (2, 0, 1, False) in kernel
+    pairs = {
+        vec: sorted(map(tuple, similarity.semantic_near_dup_pairs(
+            df, vectorized=vec, **kw).collect()))
+        for vec in (False, True)
+    }
+    assert pairs[True] == pairs[False] == [(1, 2)]
