@@ -77,10 +77,9 @@ def _resolve_vectorized(df: DataFrame, id_col: str,
     auto may only pick it when that regime is provably bounded:
 
     * `cell_cap` is set (the enforcement the semantic_dedup
-      docstring names: no capped cell is scored, so no score matrix
-      exceeds cell_cap^2 — the pair mine drops capped cells before
-      the groupBy, `_cell_labels` receives one whole but keeps its
-      rows as singletons, memory linear in the cell) and at most
+      docstring names: the pair mine and `_cell_labels` both
+      anti-join capped cells out before the groupBy, so no task sees
+      more than cell_cap rows) and at most
       `_MAX_KERNEL_CELL`, so its cell_cap^2 x 8-byte matrix is no
       larger than the worst case the size gate below admits; a
       larger cap proves nothing and falls through to that gate, or
@@ -472,19 +471,21 @@ def semantic_dedup(
     `vectorized` selects the pair-scoring kernel: the Arrow-batched
     dim-sequential numpy kernel (`_np_fold_cosines` — same float fold
     order and HALF_UP 6-dp rounding as the HOF expressions, so the
-    pair set and every downstream cluster are BIT-IDENTICAL;
-    NaN/zero-norm candidates are excluded on both paths by the
-    threshold filter) vs the interpreted HOF expressions. One
-    applyInPandas group per cell, so the whole cell must fit a task
-    (an n_cell^2 double matrix) — exactly the SemDeDup regime, with
-    `cell_cap` as the enforcement; the kernel emits BIGINT ids.
+    pair set is BIT-IDENTICAL, and so is every cluster while `id_col`
+    is a key, see above; NaN/zero-norm candidates are excluded on
+    both paths by the threshold filter) vs the interpreted HOF
+    expressions. One applyInPandas group per cell, so the whole cell
+    must fit a task (an n_cell^2 double matrix) — exactly the
+    SemDeDup regime, with `cell_cap` as the enforcement; the kernel
+    emits BIGINT ids.
     Default None = AUTO: LongType ids take the kernel (~2x faster,
     measured) WHEN the whole-cell-in-one-task memory regime is
     provably bounded — `cell_cap` set, or the whole input small
     enough that even a degenerate one-cell quantizer fits a task
     (r17: the r16 ADVICE memory-safety gate) — any other case keeps
     the streamed HOF form; see `_resolve_vectorized`. The two paths
-    share every oracle (the driver gates both hash-green).
+    share every oracle, whose ids are keys (the driver gates both
+    hash-green).
 
     Scale shape: assignment is the `ivf_assign` argmin (narrow,
     map-only; at 100 TB the corpus is written partitionBy(cell)
@@ -494,11 +495,11 @@ def semantic_dedup(
     n_assign=1 on the numpy kernel every near-dup pair, and so every
     component, lies inside one cell: the clusters resolve inside the
     cell's own applyInPandas group (`_cell_labels`), one shuffle and
-    no Spark job per label-propagation round, and `cell_cap` is an
-    in-group row count. The HOF path and n_assign > 1 mine the pair
-    table and resolve it with `dedup.connected_components`, which
-    runs on the near-dup pairs (rare by construction), never the
-    corpus.
+    no Spark job per label-propagation round; capped cells are
+    anti-joined out before that shuffle and return as singletons. The
+    HOF path and n_assign > 1 mine the pair table and resolve it with
+    `dedup.connected_components`, which runs on the near-dup pairs
+    (rare by construction), never the corpus.
 
     `centroids` takes any `ivf_assign` form: a list, a numpy matrix
     or a (cell, vector) DataFrame. Its broadcast-matrix kernel is what
@@ -526,16 +527,15 @@ def semantic_dedup(
 
     C = _centroid_matrix(centroids, centroid_id_col="cell",
                          centroid_vec_col=vec_col, caller="semantic_dedup")
-    if n_assign == 1:
-        base = ivf_assign(df, vec_col=vec_col, centroids=C).select(
-            F.col(id_col), F.col("cell"), F.col(vec_col)
-        )
-        if _resolve_vectorized(base, id_col, vectorized, cell_cap):
-            _check_cell_cap(cell_cap, "semantic_dedup")
-            return _cell_labels(base, id_col=id_col, vec_col=vec_col,
-                                threshold=threshold, cell_cap=cell_cap)
-    base, pairs = _semantic_base_and_pairs(
-        df, id_col=id_col, vec_col=vec_col, centroids=C,
+    base, members = _semantic_members(df, id_col=id_col, vec_col=vec_col,
+                                      centroids=C, n_assign=n_assign)
+    if n_assign == 1 and _resolve_vectorized(base, id_col, vectorized,
+                                             cell_cap):
+        return _cell_labels(base, id_col=id_col, vec_col=vec_col,
+                            threshold=threshold, cell_cap=cell_cap,
+                            caller="semantic_dedup")
+    pairs = _semantic_pairs(
+        base, members, id_col=id_col, vec_col=vec_col,
         threshold=threshold, cell_cap=cell_cap, vectorized=vectorized,
         n_assign=n_assign, caller="semantic_dedup",
     )
@@ -573,22 +573,21 @@ def semantic_near_dup_pairs(
     C = _centroid_matrix(centroids, centroid_id_col="cell",
                          centroid_vec_col=vec_col,
                          caller="semantic_near_dup_pairs")
-    _, pairs = _semantic_base_and_pairs(
-        df, id_col=id_col, vec_col=vec_col, centroids=C,
+    base, members = _semantic_members(df, id_col=id_col, vec_col=vec_col,
+                                      centroids=C, n_assign=n_assign)
+    return _semantic_pairs(
+        base, members, id_col=id_col, vec_col=vec_col,
         threshold=threshold, cell_cap=cell_cap, vectorized=vectorized,
         n_assign=n_assign, caller="semantic_near_dup_pairs",
     )
-    return pairs
 
 
-def _semantic_base_and_pairs(df, *, id_col, vec_col, centroids,
-                             threshold, cell_cap, vectorized, n_assign,
-                             caller):
-    """The assignment + cell-local pair mine shared by
-    `semantic_dedup` and `semantic_near_dup_pairs` (one surface, so
-    the n_assign cap wiring cannot drift between them): returns
-    (base, pairs) where `base` is (id, PRIMARY cell, vec) — one row
-    per input — and `pairs` the deduplicated (id_a, id_b) table."""
+def _semantic_members(df, *, id_col, vec_col, centroids, n_assign):
+    """The cell assignment shared by `semantic_dedup` and
+    `semantic_near_dup_pairs`: returns (base, members) where `base`
+    is (id, PRIMARY cell, vec) — one row per input — and `members`
+    the (id, cell, vec) rows the pair mine scores: `base` itself at
+    n_assign=1, one row per cell membership above it."""
     if n_assign == 1:
         cells = ivf_assign(df, vec_col=vec_col, centroids=centroids)
         members = base = cells.select(
@@ -603,6 +602,15 @@ def _semantic_base_and_pairs(df, *, id_col, vec_col, centroids,
             F.col(id_col), F.explode("cells").alias("cell"),
             F.col(vec_col),
         )
+    return base, members
+
+
+def _semantic_pairs(base, members, *, id_col, vec_col, threshold,
+                    cell_cap, vectorized, n_assign, caller):
+    """The cell-local pair mine over `_semantic_members`' output,
+    shared by `semantic_dedup` and `semantic_near_dup_pairs` (one
+    surface, so the n_assign cap wiring cannot drift between them):
+    the deduplicated (id_a, id_b) table."""
     pairs = _cell_pairs(
         members, id_col=id_col, vec_col=vec_col, threshold=threshold,
         cell_cap=cell_cap, vectorized=vectorized, caller=caller,
@@ -616,7 +624,7 @@ def _semantic_base_and_pairs(df, *, id_col, vec_col, centroids,
         # shared cell — identical rows, deterministic scoring —
         # collapse before anything downstream
         pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    return base, pairs
+    return pairs
 
 
 def semantic_dedup_recall_audit(
@@ -872,6 +880,16 @@ def _check_cell_cap(cell_cap, caller):
         raise ValueError(f"{caller}: cell_cap must be >= 1, got {cell_cap}")
 
 
+def _hot_cells(members, cap):
+    """The cells of `members` holding more than `cap` rows."""
+    return (
+        members.groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > cap)
+        .select("cell")
+    )
+
+
 def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
                 vectorized, caller, cap_base=None,
                 cap_widened=None, rank_col=None) -> DataFrame:
@@ -917,20 +935,11 @@ def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
     eligible = base
     if cell_cap is not None:
         _check_cell_cap(cell_cap, caller)
-        hot = (
-            (cap_base if cap_base is not None else base)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > cell_cap)
-            .select("cell")
-        )
+        hot = _hot_cells(cap_base if cap_base is not None else base,
+                         cell_cap)
         if cap_base is not None:
-            hot_widened = (
-                base.groupBy("cell")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .where(F.col("_n") > (cap_widened if cap_widened
-                                      is not None else cell_cap))
-                .select("cell")
+            hot_widened = _hot_cells(
+                base, cap_widened if cap_widened is not None else cell_cap
             )
             hot = hot.unionByName(hot_widened).distinct()
         eligible = base.join(hot, "cell", "left_anti")
@@ -958,7 +967,7 @@ def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
             [rank_col] if with_rank else []
         )
         pairs = (
-            eligible.select(*cols)
+            _keyed(eligible, id_col).select(*cols)
             .groupBy("cell")
             .applyInPandas(cell_pairs, schema)
         )
@@ -1069,42 +1078,62 @@ def _min_labels(n, u, v):
             lab = nxt
 
 
-def _cell_labels(base, *, id_col, vec_col, threshold, cell_cap):
+def _keyed(members, id_col):
+    """`members` without its NULL-id rows, before a per-cell kernel's
+    groupBy: a NULL id never pairs (the HOF path's `id_a < id_b` is
+    NULL) and the pair-table path's id join drops it, and with none
+    left the id column reaches pandas as int64 — a nullable one
+    arrives as float64 and rounds ids above 2^53."""
+    return members.where(F.col(id_col).isNotNull())
+
+
+def _cell_labels(base, *, id_col, vec_col, threshold, cell_cap, caller):
     """`semantic_dedup` at n_assign=1 on the numpy kernel: `base` is
     (id, cell, vec), one row per input; returns (id, cell,
     cluster_id, kept). Every near-dup pair lies inside one cell, so
     every component does too, and one applyInPandas group per cell
     scores its pairs (`_cell_scored_pairs`) and resolves them
     (`_min_labels` over the cell's unique ids) — one shuffle, no
-    pair table and no label-propagation rounds. A cell with more
-    than `cell_cap` rows keeps every row as a singleton; rows with a
-    NULL id are dropped, as the id join of the pair-table path drops
-    them."""
+    pair table and no label-propagation rounds. The cells holding
+    more than `cell_cap` rows are anti-joined out before that
+    shuffle, as in `_cell_pairs`, so no group exceeds the cap; their
+    rows return as singletons. Rows with a NULL id are dropped
+    (`_keyed`)."""
     import numpy as np
     import pandas as pd
 
     thr = float(threshold)
 
     def label(pdf):
-        capped = cell_cap is not None and len(pdf) > cell_cap
-        pdf = pdf[pdf[id_col].notna()]
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         uniq, inv = np.unique(ids, return_inverse=True)
-        root = np.arange(len(uniq))
-        if not capped:
-            scored, ia, ib = _cell_scored_pairs(pdf, id_col, vec_col, thr)
-            sids = scored[id_col].to_numpy(dtype=np.int64)
-            root = _min_labels(len(uniq), np.searchsorted(uniq, sids[ia]),
-                               np.searchsorted(uniq, sids[ib]))
+        scored, ia, ib = _cell_scored_pairs(pdf, id_col, vec_col, thr)
+        sids = scored[id_col].to_numpy(dtype=np.int64)
+        root = _min_labels(len(uniq), np.searchsorted(uniq, sids[ia]),
+                           np.searchsorted(uniq, sids[ib]))
         cluster = uniq[root[inv]]
         return pd.DataFrame({
             id_col: ids, "cell": pdf["cell"].to_numpy(dtype=np.int32),
             "cluster_id": cluster, "kept": ids == cluster,
         })
 
-    return base.groupBy("cell").applyInPandas(
+    keyed = _keyed(base, id_col)
+    scored = keyed
+    if cell_cap is not None:
+        _check_cell_cap(cell_cap, caller)
+        hot = _hot_cells(base, cell_cap)
+        scored = keyed.join(hot, "cell", "left_anti")
+    labels = scored.groupBy("cell").applyInPandas(
         label, f"{id_col} long, cell int, cluster_id long, kept boolean"
     )
+    if cell_cap is None:
+        return labels
+    capped = keyed.join(hot, "cell", "left_semi").select(
+        F.col(id_col).cast("long"), F.col("cell"),
+        F.col(id_col).cast("long").alias("cluster_id"),
+        F.lit(True).alias("kept"),
+    )
+    return labels.unionByName(capped)
 
 
 def contrastive_triplets(

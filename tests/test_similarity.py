@@ -272,10 +272,12 @@ def _pair_table_labels(df, *, centroids, threshold, cell_cap):
     kept as the oracle of `_cell_labels`."""
     from awskinesisconsumer_spark.operators.dedup import connected_components
 
-    base, pairs = similarity._semantic_base_and_pairs(
-        df, id_col="id", vec_col="v", centroids=centroids,
-        threshold=threshold, cell_cap=cell_cap, vectorized=True,
-        n_assign=1, caller="oracle",
+    base, members = similarity._semantic_members(
+        df, id_col="id", vec_col="v", centroids=centroids, n_assign=1,
+    )
+    pairs = similarity._semantic_pairs(
+        base, members, id_col="id", vec_col="v", threshold=threshold,
+        cell_cap=cell_cap, vectorized=True, n_assign=1, caller="oracle",
     )
     cc = connected_components(pairs, vertices=df.select("id"))
     return (
@@ -399,3 +401,85 @@ def test_semantic_dedup_kernel_scores_ragged_vectors_like_hof(spark):
         for vec in (False, True)
     }
     assert pairs[True] == pairs[False] == [(1, 2)]
+
+
+def test_cell_labels_keep_capped_cells_out_of_the_group(spark, tmp_path,
+                                                        monkeypatch):
+    # a cell over cell_cap is anti-joined out BEFORE the groupBy: no
+    # pandas group the labeller sees holds more than cell_cap rows,
+    # and the capped cell's rows come back as singletons
+    from pyspark.sql.group import GroupedData
+
+    seen = str(tmp_path / "group_sizes")
+    apply = GroupedData.applyInPandas
+
+    def spy_apply(self, func, schema):
+        def spy(pdf):
+            with open(seen, "a") as f:
+                f.write(f"{len(pdf)}\n")
+            return func(pdf)
+
+        return apply(self, spy, schema)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy_apply)
+    # 12 near-identical rows crowd cell 0 (the constant-embedding
+    # blob); cell 1 holds two near-dups and a third row
+    rows = [(i, [1.0, 0.001 * i]) for i in range(1, 13)]
+    rows += [(20, [0.0, 1.0]), (21, [0.01, 1.0]), (22, [-1.0, 1.0])]
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    got = sorted(map(tuple, semantic_dedup(
+        df, id_col="id", vec_col="v", centroids=cents, threshold=0.95,
+        cell_cap=4, vectorized=True,
+    ).collect()))
+    sizes = [int(n) for n in open(seen).read().split()]
+    assert sizes and max(sizes) <= 4 and sum(sizes) == 3
+    assert got == sorted(
+        [(i, 0, i, True) for i in range(1, 13)]
+        + [(20, 1, 20, True), (21, 1, 20, False), (22, 1, 22, True)]
+    )
+    monkeypatch.undo()
+    assert got == sorted(map(tuple, _pair_table_labels(
+        df, centroids=cents, threshold=0.95, cell_cap=4).collect()))
+
+
+def test_semantic_dedup_kernel_keeps_ids_above_2_53_beside_a_null_id(spark):
+    # a NULL id in the cell must not turn the id column into float64,
+    # which would round 2^53 + 1 and 2^53 + 3 to other ids
+    big = 2**53 + 1
+    df = spark.createDataFrame(
+        [(None, [1.0, 0.0]), (big, [1.0, 0.001]), (big + 2, [1.0, 0.002]),
+         (5, [0.0, 1.0])],
+        "id bigint, v array<double>",
+    )
+    kw = dict(id_col="id", vec_col="v", centroids=[[1.0, 0.0], [0.0, 1.0]],
+              threshold=0.95)
+    for vec in (False, True):
+        assert sorted(map(tuple, semantic_dedup(
+            df, vectorized=vec, **kw).collect())) == [
+            (5, 1, 5, True), (big, 0, big, True), (big + 2, 0, big, False)]
+        assert [tuple(r) for r in similarity.semantic_near_dup_pairs(
+            df, vectorized=vec, **kw).collect()] == [(big, big + 2)]
+
+
+def test_semantic_dedup_id_in_two_cells_splits_on_the_kernel_path(spark):
+    # `id_col` is a key: id 2 with two different vectors lands in two
+    # cells. The pair table resolves components globally and merges
+    # both cells through id 2; the n_assign=1 kernel resolves each
+    # cell on its own. Pinned so the difference stays documented.
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (2, [0.01, 1.0]),
+         (3, [0.0, 1.0])],
+        "id bigint, v array<double>",
+    )
+    kw = dict(id_col="id", vec_col="v", centroids=[[1.0, 0.0], [0.0, 1.0]],
+              threshold=0.95)
+    got = {
+        vec: sorted(map(tuple, semantic_dedup(df, vectorized=vec, **kw)
+                        .collect()))
+        for vec in (False, True)
+    }
+    assert got[False] == [(1, 0, 1, True), (2, 0, 1, False),
+                          (2, 1, 1, False), (3, 1, 1, False)]
+    assert got[True] == [(1, 0, 1, True), (2, 0, 1, False),
+                         (2, 1, 2, True), (3, 1, 2, False)]
