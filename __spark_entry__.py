@@ -5089,12 +5089,10 @@ def _semantic_dedup_table(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _semantic_dedup_vec(spark: SparkSession, sf: str) -> DataFrame:
-    # The PRODUCTION-kernel SemDeDup bench line the r11 verdict asked
-    # for (the CDC-prod pattern): vectorized=True scores each cell's
-    # pairwise cosines with the Arrow-batched dim-sequential numpy
-    # kernel — bit-identical pair set (pinned in
-    # tests/test_round11_ops.py), so the ext-dedup-semantic oracle
-    # gates this form too (hash-green, not rows-only).
+    # SemDeDup has one cell kernel, so this now times the same call
+    # as ext-dedup-semantic and shares its oracle. It stays
+    # registered until the registry is split into per-family modules
+    # (ROADMAP item 10), which decides its removal.
     from awskinesisconsumer_spark.operators.similarity import (
         ivf_centroids_from_sample, semantic_dedup,
     )
@@ -5105,7 +5103,7 @@ def _semantic_dedup_vec(spark: SparkSession, sf: str) -> DataFrame:
     )
     return semantic_dedup(
         emb, id_col="vec_id", vec_col="embedding",
-        centroids=centroids, threshold=0.3, vectorized=True,
+        centroids=centroids, threshold=0.3,
     )
 
 
@@ -12674,12 +12672,12 @@ def oracle_sql() -> dict[str, str]:
     # Map-only streaming expansion: appended union == batch, twin
     # shared verbatim (the quality-blend-stream contract).
     d["stream-mixture-expand"] = d["ext-mixture-expand"]
-    # The centroid-TABLE and vectorized-kernel SemDeDup forms are
-    # BIT-IDENTICAL to the literal/HOF gate form (dim-sequential
-    # folds, first-min ties — tests/test_round12_ops.py /
-    # test_round11_ops.py), so they share its oracle verbatim; same
-    # for the vectorized batch k-NN join (the embeddings tables have
-    # no NULL/zero-norm vectors, the one documented divergence).
+    # The centroid-TABLE SemDeDup form is BIT-IDENTICAL to the
+    # literal-centroid gate form (dim-sequential folds, first-min
+    # ties — tests/test_round12_ops.py), and the -vec entry is the
+    # same call as the gate form, so both share its oracle verbatim;
+    # so does the vectorized batch k-NN join (the embeddings tables
+    # have no NULL/zero-norm vectors, the one documented divergence).
     d["ext-dedup-semantic-table"] = d["ext-dedup-semantic"]
     d["ext-dedup-semantic-vec"] = d["ext-dedup-semantic"]
     # n_assign=2 SemDeDup: the ext-dedup-semantic oracle with pair

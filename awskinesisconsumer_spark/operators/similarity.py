@@ -19,11 +19,15 @@ Two tiers over an `array<float>` embedding column:
 from __future__ import annotations
 
 import math
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    BooleanType, IntegerType, StructField, StructType,
+)
 
 
 def _dot(a, b):
@@ -47,71 +51,6 @@ def _safe_div(num, denom):
     than every double in Spark, so an unguarded 0/0 would rank
     zero-norm vectors at the TOP of every desc similarity ordering."""
     return F.when(denom > 0, num / denom)
-
-
-# Plan-estimated input size under which auto may pick the per-cell
-# kernel even with no cell_cap: 4 MiB ~ 8k rows of 64-dim float64.
-_AUTO_KERNEL_BYTES = 4 * 1024 * 1024
-
-# _AUTO_KERNEL_BYTES of 64-dim float64 rows: 8192 rows, a 512 MiB
-# dense score matrix if they all land in one cell.
-_MAX_KERNEL_CELL = 8192
-
-
-def _resolve_vectorized(df: DataFrame, id_col: str,
-                        vectorized: bool | None,
-                        cell_cap: int | None = None) -> bool:
-    """Resolve a `vectorized=None` (auto) kernel choice for the
-    cell-pair mine: the Arrow-batched numpy kernel
-    (`_np_fold_cosines`) is BIT-IDENTICAL to the HOF expressions
-    (dim-sequential fold, HALF_UP 6-dp rounding, NaN/zero-norm
-    exclusion — pinned in tests/test_round11_ops.py and gated by the
-    same oracles) and measured ~2x faster at sf0.1. Its one schema
-    requirement: the kernel emits BIGINT ids, so non-LongType id
-    columns always keep the HOF form (whose output preserves the
-    input id type exactly).
-
-    MEMORY regime (r16 ADVICE, medium): the kernel runs one
-    applyInPandas group per cell — the whole cell materializes in
-    one task and the score matrix is dense n_cell^2 float64 — so
-    auto may only pick it when that regime is provably bounded:
-
-    * `cell_cap` is set (the enforcement the semantic_dedup
-      docstring names: the pair mine and `_cell_labels` both
-      anti-join capped cells out before the groupBy, so no task sees
-      more than cell_cap rows) and at most
-      `_MAX_KERNEL_CELL`, so its cell_cap^2 x 8-byte matrix is no
-      larger than the worst case the size gate below admits; a
-      larger cap proves nothing and falls through to that gate, or
-    * the plan-estimated size of the WHOLE input is small enough
-      that even the degenerate all-rows-in-one-cell case fits a
-      task comfortably (`_AUTO_KERNEL_BYTES`, 4 MiB ~ 8k rows of
-      64-dim float64 ~ a 512 MB worst-case matrix; the fan_out_small
-      size-gate pattern). Streaming or unsized plans never
-      auto-vectorize.
-
-    Past both gates a skewed/giant cell that the streamed HOF
-    cell-join would have handled could OOM an executor, so the user
-    must opt in explicitly: pass cell_cap (preferred — it is the
-    documented skew guard) or force `vectorized=True`. Pass
-    True/False to force a path (tests pin both)."""
-    if vectorized is not None:
-        return vectorized
-    from pyspark.sql.types import LongType
-
-    if not isinstance(df.schema[id_col].dataType, LongType):
-        return False
-    if cell_cap is not None and cell_cap <= _MAX_KERNEL_CELL:
-        return True
-    if df.isStreaming:
-        return False
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes()))
-    except Exception:  # unsized/foreign plan: keep the streamed HOF
-        return False
-    return size <= _AUTO_KERNEL_BYTES
 
 
 def cosine_scores(
@@ -237,11 +176,15 @@ def _centroid_matrix(centroids, *, centroid_id_col: str,
     return C
 
 
-# Cap on one Arrow batch's (rows x k) distance matrix in the
-# assignment kernels: 4M float64 cells, 32 MiB (plus a same-size
-# temporary). A batch is scored in blocks of _ASSIGN_BLOCK_CELLS // k
-# rows, so memory per task stays flat however large k grows.
-_ASSIGN_BLOCK_CELLS = 1 << 22
+# Cap on one row block's score matrix in the numpy kernels: 4M
+# float64 cells, 32 MiB. The assignment kernels score an Arrow batch
+# in blocks of _BLOCK_CELLS // k rows against the k centroids (plus a
+# same-size temporary); the SemDeDup cell kernels score a cell of n
+# rows in blocks of _BLOCK_CELLS // n rows against the rest of the
+# cell (`_np_fold_cosines` and its rounding hold up to ~10 same-size
+# temporaries, ~300 MiB). Memory per task stays flat however large k
+# or the cell grows.
+_BLOCK_CELLS = 1 << 22
 
 
 def _sq_dist_blocks(v: pd.Series, C, rows: int):
@@ -276,7 +219,7 @@ def ivf_assign(
     Arrow-batched pandas UDF, so k can GROW with the corpus (SemDeDup's
     n/k ~ 2k balance rule) — k in the tens of thousands is a few MB of
     broadcast — and each batch is scored in row blocks that bound its
-    distance matrix (`_ASSIGN_BLOCK_CELLS`).
+    distance matrix (`_BLOCK_CELLS`).
 
     `centroids` is a list[list[float]] / numpy (k, dim) matrix, or a
     DataFrame holding (`centroid_id_col`, `centroid_vec_col`
@@ -300,7 +243,7 @@ def ivf_assign(
                          centroid_id_col=centroid_id_col,
                          centroid_vec_col=centroid_vec_col or vec_col,
                          caller="ivf_assign")
-    rows = max(1, _ASSIGN_BLOCK_CELLS // C.shape[0])
+    rows = max(1, _BLOCK_CELLS // C.shape[0])
 
     @pandas_udf("int")
     def _assign(v: pd.Series) -> pd.Series:
@@ -426,7 +369,6 @@ def semantic_dedup(
     centroids,
     threshold: float = 0.95,
     cell_cap: int | None = None,
-    vectorized: bool | None = None,
     n_assign: int = 1,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) — the cluster-then-dedup-within-
@@ -449,11 +391,12 @@ def semantic_dedup(
     exactly one kept row per duplicate cluster, singletons kept.
 
     `id_col` is a KEY: the labels are exact for ids that are unique,
-    or duplicated only within one cell. The n_assign=1 kernel path
-    resolves components per cell, so an id that lands in two cells
-    (two rows with the same id and different vectors) no longer joins
-    the two cells' components through that id, as the global
-    pair-table resolution of the other paths does.
+    or duplicated only within one cell. At n_assign=1 components
+    resolve per cell, so an id that lands in two cells (two rows with
+    the same id and different vectors) does not join the two cells'
+    components through that id, as the global pair-table resolution
+    of n_assign > 1 does. The output `id_col` and `cluster_id` keep
+    the input id column's type.
 
     `cell_cap` (optional) skips pair generation inside cells larger
     than the cap — the `hot_cap` skew guard for a degenerate
@@ -468,36 +411,27 @@ def semantic_dedup(
     tiny; only the membership check catches it, and it wins over the
     superset property exactly there). See `_cell_pairs`.
 
-    `vectorized` selects the pair-scoring kernel: the Arrow-batched
-    dim-sequential numpy kernel (`_np_fold_cosines` — same float fold
-    order and HALF_UP 6-dp rounding as the HOF expressions, so the
-    pair set is BIT-IDENTICAL, and so is every cluster while `id_col`
-    is a key, see above; NaN/zero-norm candidates are excluded on
-    both paths by the threshold filter) vs the interpreted HOF
-    expressions. One applyInPandas group per cell, so the whole cell
-    must fit a task (an n_cell^2 double matrix) — exactly the
-    SemDeDup regime, with `cell_cap` as the enforcement; the kernel
-    emits BIGINT ids.
-    Default None = AUTO: LongType ids take the kernel (~2x faster,
-    measured) WHEN the whole-cell-in-one-task memory regime is
-    provably bounded — `cell_cap` set, or the whole input small
-    enough that even a degenerate one-cell quantizer fits a task
-    (r17: the r16 ADVICE memory-safety gate) — any other case keeps
-    the streamed HOF form; see `_resolve_vectorized`. The two paths
-    share every oracle, whose ids are keys (the driver gates both
-    hash-green).
+    Pairs are scored by one numpy kernel per cell (`_np_fold_cosines`:
+    a dim-sequential left fold per pair, HALF_UP 6-dp rounding, the
+    arithmetic of the oracles' SQL; a zero norm or a NULL element
+    gives no score). Each cell is one applyInPandas group scored in
+    row blocks of `_BLOCK_CELLS` // n_cell rows against the rows after
+    them, so a task holds the cell's rows, one block's score matrices
+    (see `_BLOCK_CELLS`) and one block's pairs — never an n_cell^2
+    matrix. Time is still O(n_cell^2) in one task, so `cell_cap`
+    remains the guard against a degenerate giant cell.
 
     Scale shape: assignment is the `ivf_assign` argmin (narrow,
     map-only; at 100 TB the corpus is written partitionBy(cell)
     once and this op reads cell-partitioned files with ZERO
     shuffle); pair scoring is cell-local, O(sum cell_size^2) —
     bounded by the quantizer's balance, audited by `cell_cap`. At
-    n_assign=1 on the numpy kernel every near-dup pair, and so every
-    component, lies inside one cell: the clusters resolve inside the
-    cell's own applyInPandas group (`_cell_labels`), one shuffle and
-    no Spark job per label-propagation round; capped cells are
-    anti-joined out before that shuffle and return as singletons. The
-    HOF path and n_assign > 1 mine the pair table and resolve it with
+    n_assign=1 every near-dup pair, and so every component, lies
+    inside one cell: the clusters resolve inside the cell's own
+    applyInPandas group (`_cell_labels`), one shuffle and no Spark
+    job per label-propagation round; capped cells are anti-joined
+    out before that shuffle and return as singletons. n_assign > 1
+    mines the pair table and resolves it with
     `dedup.connected_components`, which runs on the near-dup pairs
     (rare by construction), never the corpus.
 
@@ -529,14 +463,13 @@ def semantic_dedup(
                          centroid_vec_col=vec_col, caller="semantic_dedup")
     base, members = _semantic_members(df, id_col=id_col, vec_col=vec_col,
                                       centroids=C, n_assign=n_assign)
-    if n_assign == 1 and _resolve_vectorized(base, id_col, vectorized,
-                                             cell_cap):
+    if n_assign == 1:
         return _cell_labels(base, id_col=id_col, vec_col=vec_col,
                             threshold=threshold, cell_cap=cell_cap,
                             caller="semantic_dedup")
     pairs = _semantic_pairs(
         base, members, id_col=id_col, vec_col=vec_col,
-        threshold=threshold, cell_cap=cell_cap, vectorized=vectorized,
+        threshold=threshold, cell_cap=cell_cap,
         n_assign=n_assign, caller="semantic_dedup",
     )
     cc = connected_components(
@@ -559,7 +492,6 @@ def semantic_near_dup_pairs(
     centroids,
     threshold: float = 0.95,
     cell_cap: int | None = None,
-    vectorized: bool | None = None,
     n_assign: int = 1,
 ) -> DataFrame:
     """The PAIR table under `semantic_dedup` as a public surface:
@@ -577,7 +509,7 @@ def semantic_near_dup_pairs(
                                       centroids=C, n_assign=n_assign)
     return _semantic_pairs(
         base, members, id_col=id_col, vec_col=vec_col,
-        threshold=threshold, cell_cap=cell_cap, vectorized=vectorized,
+        threshold=threshold, cell_cap=cell_cap,
         n_assign=n_assign, caller="semantic_near_dup_pairs",
     )
 
@@ -606,14 +538,14 @@ def _semantic_members(df, *, id_col, vec_col, centroids, n_assign):
 
 
 def _semantic_pairs(base, members, *, id_col, vec_col, threshold,
-                    cell_cap, vectorized, n_assign, caller):
+                    cell_cap, n_assign, caller):
     """The cell-local pair mine over `_semantic_members`' output,
     shared by `semantic_dedup` and `semantic_near_dup_pairs` (one
     surface, so the n_assign cap wiring cannot drift between them):
     the deduplicated (id_a, id_b) table."""
     pairs = _cell_pairs(
         members, id_col=id_col, vec_col=vec_col, threshold=threshold,
-        cell_cap=cell_cap, vectorized=vectorized, caller=caller,
+        cell_cap=cell_cap, caller=caller,
         # primary-size cap + widened-membership cost guard — see
         # _cell_pairs.cap_base / cap_widened
         cap_base=None if n_assign == 1 else base.select("cell"),
@@ -636,7 +568,6 @@ def semantic_dedup_recall_audit(
     threshold: float = 0.95,
     n_assign_values: tuple[int, ...] = (1, 2),
     cell_cap: int | None = None,
-    vectorized: bool | None = None,
     truth_max_rows: int | None = 20_000,
 ) -> DataFrame:
     """SemDeDup recall audit (r12 verdict item 2) — the family
@@ -753,7 +684,6 @@ def semantic_dedup_recall_audit(
             ranked = _cell_pairs(
                 members, id_col=id_col, vec_col=vec_col,
                 threshold=threshold, cell_cap=None,
-                vectorized=vectorized,
                 caller="semantic_dedup_recall_audit", rank_col="_rank",
             )
             caught = truth.join(ranked, ["id_a", "id_b"]).select(
@@ -797,7 +727,7 @@ def semantic_dedup_recall_audit(
             cand = semantic_near_dup_pairs(
                 df, id_col=id_col, vec_col=vec_col, centroids=C,
                 threshold=threshold, cell_cap=cell_cap,
-                vectorized=vectorized, n_assign=int(n),
+                n_assign=int(n),
             ).select("id_a", "id_b")
             caught = truth.join(cand, ["id_a", "id_b"], "left_semi")
             per_caught = caught.select(bucket).groupBy("bucket_lo").agg(
@@ -863,7 +793,7 @@ def ivf_assign_multi(
                          caller="ivf_assign_multi")
     k = C.shape[0]
     n_top = min(int(n_assign), k)
-    rows = max(1, _ASSIGN_BLOCK_CELLS // k)
+    rows = max(1, _BLOCK_CELLS // k)
 
     @pandas_udf("array<int>")
     def _assign_n(v: pd.Series) -> pd.Series:
@@ -890,12 +820,20 @@ def _hot_cells(members, cap):
     )
 
 
-def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
-                vectorized, caller, cap_base=None,
-                cap_widened=None, rank_col=None) -> DataFrame:
+def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap, caller,
+                cap_base=None, cap_widened=None,
+                rank_col=None) -> DataFrame:
     """Cell-local near-dup pair mining shared by semantic_dedup /
     semantic_near_dup_pairs: `base` is (id, cell, vec); returns
-    (id_a, id_b). See semantic_dedup for the contracts.
+    (id_a, id_b), typed as the id column. See semantic_dedup for the
+    contracts.
+
+    One applyInPandas group per cell, in the iterator form: the group
+    scores its rows in row blocks (`_cell_scored_pairs`) and yields
+    each block's pairs before it scores the next, so a task holds the
+    cell's rows, one block's score matrix and one block's pairs —
+    never the n_cell^2 matrix or the cell's whole pair list. Rows
+    with a NULL id are dropped (`_keyed`).
 
     `rank_col` (optional, the recall audit's single-mine form — r13
     verdict item 6): when `base` carries a 1-based membership rank
@@ -931,7 +869,8 @@ def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
       repo rule), which is the one regime where n_assign=2 may mine
       fewer pairs than n_assign=1; it is the regime where
       n_assign=1's own cap already gave up the cell's recall."""
-    vectorized = _resolve_vectorized(base, id_col, vectorized, cell_cap)
+    import numpy as np
+
     eligible = base
     if cell_cap is not None:
         _check_cell_cap(cell_cap, caller)
@@ -943,127 +882,103 @@ def _cell_pairs(base, *, id_col, vec_col, threshold, cell_cap,
             )
             hot = hot.unionByName(hot_widened).distinct()
         eligible = base.join(hot, "cell", "left_anti")
-    if vectorized:
-        import numpy as np
-        import pandas as pd
+    thr = float(threshold)
+    block_cells = _BLOCK_CELLS
+    with_rank = rank_col is not None
 
-        thr = float(threshold)
-        with_rank = rank_col is not None
-
-        def cell_pairs(pdf):
-            pdf, ia, ib = _cell_scored_pairs(pdf, id_col, vec_col, thr)
-            ids = pdf[id_col].to_numpy()
-            out = {"id_a": pd.Series(ids[ia], dtype="int64"),
-                   "id_b": pd.Series(ids[ib], dtype="int64")}
+    def cell_pairs(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        pdf, blocks = _cell_scored_pairs(
+            pd.concat(batches, ignore_index=True), id_col, vec_col, thr,
+            block_cells)
+        ids = pdf[id_col].to_numpy()
+        rk = pdf[rank_col].to_numpy() if with_rank else None
+        for ia, ib in blocks:
+            out = {"id_a": ids[ia], "id_b": ids[ib]}
             if with_rank:
-                rk = pdf[rank_col].to_numpy()
-                out["_lev"] = pd.Series(
-                    np.maximum(rk[ia], rk[ib]), dtype="int32")
-            return pd.DataFrame(out)
+                out["_lev"] = np.maximum(rk[ia], rk[ib]).astype(np.int32)
+            yield pd.DataFrame(out)
 
-        schema = ("id_a long, id_b long, _lev int" if with_rank
-                  else "id_a long, id_b long")
-        cols = ["cell", id_col, vec_col] + (
-            [rank_col] if with_rank else []
+    id_type = base.schema[id_col].dataType
+    schema = StructType(
+        [StructField("id_a", id_type), StructField("id_b", id_type)]
+        + ([StructField("_lev", IntegerType())] if with_rank else [])
+    )
+    cols = ["cell", id_col, vec_col] + ([rank_col] if with_rank else [])
+    pairs = (
+        _keyed(eligible, id_col).select(*cols)
+        .groupBy("cell")
+        .applyInPandas(cell_pairs, schema)
+    )
+    if with_rank:
+        pairs = pairs.groupBy("id_a", "id_b").agg(
+            F.min("_lev").cast("int").alias("_colev")
         )
-        pairs = (
-            _keyed(eligible, id_col).select(*cols)
-            .groupBy("cell")
-            .applyInPandas(cell_pairs, schema)
-        )
-        if with_rank:
-            pairs = pairs.groupBy("id_a", "id_b").agg(
-                F.min("_lev").cast("int").alias("_colev")
-            )
-    else:
-        # norms are precomputed ONCE per row in the projections (the
-        # per-pair expression then folds only the dot product — 3x
-        # less interpreted-HOF work per candidate; float-identical to
-        # inline norms, so the oracle's per-pair norm arithmetic
-        # still matches)
-        lcols = [
-            F.col("cell"), F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("_va"),
-            _norm(F.col(vec_col)).alias("_na"),
-        ]
-        rcols = [
-            F.col("cell"), F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("_vb"),
-            _norm(F.col(vec_col)).alias("_nb"),
-        ]
-        if rank_col is not None:
-            lcols.append(F.col(rank_col).alias("_ra"))
-            rcols.append(F.col(rank_col).alias("_rb"))
-        left = eligible.select(*lcols)
-        right = eligible.select(*rcols)
-        sim = _safe_div(_dot(F.col("_va"), F.col("_vb")),
-                        F.col("_na") * F.col("_nb"))
-        pairs = (
-            left.join(right, "cell")
-            .where(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine_sim", F.round(sim, 6))
-            .where(F.col("cosine_sim") >= threshold)
-        )
-        if rank_col is not None:
-            pairs = pairs.groupBy("id_a", "id_b").agg(
-                F.min(F.greatest("_ra", "_rb")).cast("int")
-                .alias("_colev")
-            )
-        else:
-            pairs = pairs.select("id_a", "id_b")
     return pairs
 
 
-def _cell_scored_pairs(pdf, id_col, vec_col, threshold):
+def _cell_scored_pairs(pdf, id_col, vec_col, threshold, block_cells):
     """The scoring rules of the per-cell numpy kernels (`_cell_pairs`'
     pair mine and `_cell_labels`), in one place: drop NULL-vector
     rows, sort by id, and score with `_np_fold_cosines` only pairs of
-    EQUAL-LENGTH vectors — the HOF rule, where `zip_with` pads a
-    shorter vector with NULLs and the fold yields a NULL cosine. A
-    NULL element arrives from Arrow as NaN and, like a zero norm,
-    gives a NaN cosine the threshold test drops. Returns (pdf, ia,
-    ib): the filtered, sorted group and the positions of its pairs
-    with cosine >= `threshold` and id_a < id_b."""
+    EQUAL-LENGTH vectors (a pair of different lengths has no
+    elementwise fold, so no score). A NULL element arrives from Arrow
+    as NaN and, like a zero norm, gives a NaN cosine the threshold
+    test drops.
+
+    The n rows of one vector length are scored in row blocks of
+    max(1, `block_cells` // n) rows, each against the rows from the
+    block's start onward: ids are sorted, so that upper triangle
+    holds every pair with id_a < id_b, and no score matrix exceeds
+    max(`block_cells`, n) cells. Returns (pdf, blocks): the filtered,
+    sorted group and a generator of (ia, ib), the positions of one
+    block's pairs with cosine >= `threshold` and id_a < id_b, scored
+    as the generator is consumed."""
     import numpy as np
 
     pdf = (
         pdf[pdf[vec_col].notna()]
         .sort_values(id_col).reset_index(drop=True)
     )
-    vecs = pdf[vec_col].to_numpy()
-    lens = np.fromiter((len(v) for v in vecs), dtype=np.int64,
-                       count=len(vecs))
-    ids = pdf[id_col].to_numpy()
-    ia_parts, ib_parts = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
-    for dim in np.unique(lens):
-        pos = np.nonzero(lens == dim)[0]
-        if len(pos) < 2:
-            continue
-        m = np.stack(vecs[pos]).astype(np.float64)
-        sims = _np_fold_cosines(m, m)
-        ia, ib = np.nonzero(~np.isnan(sims) & (sims >= threshold))
-        ia, ib = pos[ia], pos[ib]
-        # compare IDS, not positions (r16 ADVICE): a duplicated id
-        # would otherwise emit id_a == id_b self-pairs the HOF path's
-        # `id_a < id_b` filter excludes
-        keep = ids[ia] < ids[ib]
-        ia_parts.append(ia[keep])
-        ib_parts.append(ib[keep])
-    return pdf, np.concatenate(ia_parts), np.concatenate(ib_parts)
+
+    def blocks():
+        vecs = pdf[vec_col].to_numpy()
+        lens = np.fromiter((len(v) for v in vecs), dtype=np.int64,
+                           count=len(vecs))
+        ids = pdf[id_col].to_numpy()
+        for dim in np.unique(lens):
+            pos = np.nonzero(lens == dim)[0]
+            n = len(pos)
+            m = np.stack(vecs[pos]).astype(np.float64)
+            rows = max(1, block_cells // n)
+            for s in range(0, n - 1, rows):
+                sims = _np_fold_cosines(m[s:s + rows], m[s:])
+                ia, ib = np.nonzero(~np.isnan(sims) & (sims >= threshold))
+                ia, ib = pos[s + ia], pos[s + ib]
+                # compare IDS, not positions: a duplicated id must not
+                # pair with itself
+                keep = ids[ia] < ids[ib]
+                if keep.any():
+                    yield ia[keep], ib[keep]
+
+    return pdf, blocks()
 
 
-def _min_labels(n, u, v):
-    """Connected components of the graph on vertices 0..n-1 with edges
-    (u[i], v[i]): each vertex's label is the SMALLEST vertex of its
-    component. Min-label hooking plus pointer jumping, vectorized over
-    the edge arrays — no Python loop per edge. Every label is a vertex
-    of the same component and no larger than its own vertex; each
-    unconverged round hooks at least one root below itself, so the
-    root count falls until every edge joins equal labels, which is
-    then the component minimum."""
+def _min_labels(lab, u, v):
+    """Fold the edges (u[i], v[i]) into `lab`, a labelling of the
+    vertices 0..n-1 in which each vertex's label is the SMALLEST vertex
+    of its component (`np.arange(n)` before any edge): returns the
+    labelling of the graph with the new edges added, so a caller can
+    fold its edges in batch by batch. Min-label hooking plus pointer
+    jumping, vectorized over the edge arrays — no Python loop per
+    edge. Every label is a vertex of the same component and no larger
+    than its own vertex; each unconverged round hooks at least one
+    root below itself, so the root count falls until every edge joins
+    equal labels, which is then the component minimum. `lab` may be
+    modified; use the returned labelling."""
     import numpy as np
 
-    lab = np.arange(n)
     while True:
         lu, lv = lab[u], lab[v]
         if np.array_equal(lu, lv):
@@ -1080,57 +995,63 @@ def _min_labels(n, u, v):
 
 def _keyed(members, id_col):
     """`members` without its NULL-id rows, before a per-cell kernel's
-    groupBy: a NULL id never pairs (the HOF path's `id_a < id_b` is
-    NULL) and the pair-table path's id join drops it, and with none
-    left the id column reaches pandas as int64 — a nullable one
+    groupBy: a NULL id never pairs (`id_a < id_b` is NULL) and the
+    pair-table path's id join drops it, and with none left an integer
+    id column reaches pandas as an integer array — a nullable one
     arrives as float64 and rounds ids above 2^53."""
     return members.where(F.col(id_col).isNotNull())
 
 
 def _cell_labels(base, *, id_col, vec_col, threshold, cell_cap, caller):
-    """`semantic_dedup` at n_assign=1 on the numpy kernel: `base` is
-    (id, cell, vec), one row per input; returns (id, cell,
-    cluster_id, kept). Every near-dup pair lies inside one cell, so
+    """`semantic_dedup` at n_assign=1: `base` is (id, cell, vec), one
+    row per input; returns (id, cell, cluster_id, kept), the ids typed
+    as the id column. Every near-dup pair lies inside one cell, so
     every component does too, and one applyInPandas group per cell
-    scores its pairs (`_cell_scored_pairs`) and resolves them
-    (`_min_labels` over the cell's unique ids) — one shuffle, no
-    pair table and no label-propagation rounds. The cells holding
-    more than `cell_cap` rows are anti-joined out before that
-    shuffle, as in `_cell_pairs`, so no group exceeds the cap; their
-    rows return as singletons. Rows with a NULL id are dropped
-    (`_keyed`)."""
+    scores its pairs in row blocks (`_cell_scored_pairs`) and folds
+    each block's edges into the labels of the cell's unique ids
+    (`_min_labels`) before it scores the next: memory O(n_cell + one
+    block), one shuffle, no pair table and no label-propagation
+    rounds. The cells holding more than `cell_cap` rows are
+    anti-joined out before that shuffle, as in `_cell_pairs`, so no
+    group exceeds the cap; their rows return as singletons. Rows with
+    a NULL id are dropped (`_keyed`)."""
     import numpy as np
-    import pandas as pd
 
     thr = float(threshold)
+    block_cells = _BLOCK_CELLS
 
     def label(pdf):
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        ids = pdf[id_col].to_numpy()
         uniq, inv = np.unique(ids, return_inverse=True)
-        scored, ia, ib = _cell_scored_pairs(pdf, id_col, vec_col, thr)
-        sids = scored[id_col].to_numpy(dtype=np.int64)
-        root = _min_labels(len(uniq), np.searchsorted(uniq, sids[ia]),
-                           np.searchsorted(uniq, sids[ib]))
+        scored, blocks = _cell_scored_pairs(pdf, id_col, vec_col, thr,
+                                            block_cells)
+        vertex = np.searchsorted(uniq, scored[id_col].to_numpy())
+        root = np.arange(len(uniq))
+        for ia, ib in blocks:
+            root = _min_labels(root, vertex[ia], vertex[ib])
         cluster = uniq[root[inv]]
         return pd.DataFrame({
             id_col: ids, "cell": pdf["cell"].to_numpy(dtype=np.int32),
             "cluster_id": cluster, "kept": ids == cluster,
         })
 
+    id_type = base.schema[id_col].dataType
+    schema = StructType([
+        StructField(id_col, id_type), StructField("cell", IntegerType()),
+        StructField("cluster_id", id_type),
+        StructField("kept", BooleanType()),
+    ])
     keyed = _keyed(base, id_col)
     scored = keyed
     if cell_cap is not None:
         _check_cell_cap(cell_cap, caller)
         hot = _hot_cells(base, cell_cap)
         scored = keyed.join(hot, "cell", "left_anti")
-    labels = scored.groupBy("cell").applyInPandas(
-        label, f"{id_col} long, cell int, cluster_id long, kept boolean"
-    )
+    labels = scored.groupBy("cell").applyInPandas(label, schema)
     if cell_cap is None:
         return labels
     capped = keyed.join(hot, "cell", "left_semi").select(
-        F.col(id_col).cast("long"), F.col("cell"),
-        F.col(id_col).cast("long").alias("cluster_id"),
+        F.col(id_col), F.col("cell"), F.col(id_col).alias("cluster_id"),
         F.lit(True).alias("kept"),
     )
     return labels.unionByName(capped)

@@ -1048,7 +1048,6 @@ def semantic_dedup_stream(
     threshold: float = 0.95,
     out_path: str,
     checkpoint: str,
-    vectorized: bool | None = None,
     broadcast_reps: bool | str = "auto",
     broadcast_reps_cap: int = 100_000,
     trigger_available_now: bool = True,
@@ -1097,11 +1096,9 @@ def semantic_dedup_stream(
     C = _centroid_matrix(centroids, centroid_id_col="cell",
                          centroid_vec_col=vec_col,
                          caller="semantic_dedup_stream")
-    # `vectorized` picks the freeze's pair-scoring kernel (see
-    # semantic_dedup); both kernels give the same pairs.
     sem = semantic_dedup(
         reference, id_col=id_col, vec_col=vec_col,
-        centroids=C, threshold=threshold, vectorized=vectorized,
+        centroids=C, threshold=threshold,
     )
     # r17 (VERDICT item 3): persist the PREPARED rep side — norms
     # precomputed once per stream start — so every trigger's apply

@@ -8,6 +8,7 @@ Checks the checkout this script lives in, on $SPARK_GRAFT_CPUS cores
 
 Usage: python scripts/oracle_check.py <query> [<query> ...]
 """
+import hashlib
 import math
 import os
 import sys
@@ -58,8 +59,11 @@ def main() -> int:
         cols = sorted(sdf.columns)
         srows = sorted(
             tuple(canon(r[c]) for c in cols) for r in sdf.collect())
+        # the first 16 hex of SHA-256 over the sorted canonical rows:
+        # equal across two checkouts iff they return the same rows
+        digest = hashlib.sha256(repr(srows).encode()).hexdigest()[:16]
         if name not in osql:
-            print(f"{name} ROWS-ONLY {len(srows)} rows "
+            print(f"{name} ROWS-ONLY {len(srows)} rows {digest} "
                   f"{time.time()-t0:.1f}s", flush=True)
             continue
         tbl = con.execute(osql[name]).fetch_arrow_table()
@@ -69,8 +73,8 @@ def main() -> int:
         ok = "MATCH" if srows == drows else "MISMATCH"
         if ok != "MATCH":
             rc = 1
-        print(f"{name} {ok} {len(srows)} {time.time()-t0:.1f}s",
-              flush=True)
+        print(f"{name} {ok} {len(srows)} {digest} "
+              f"{time.time()-t0:.1f}s", flush=True)
     spark.stop()
     return rc
 

@@ -513,7 +513,7 @@ def emb_ops():
             threshold=0.95, cell_cap=1500,
         )
 
-    def semdedup_ktracked(d, vectorized=False):
+    def semdedup_ktracked(d):
         # r12: k TRACKS the corpus per the paper's n/k ~ 2k balance
         # rule (k = sqrt(n/2): 32/100/200 cells at 2k/20k/80k
         # vectors) — executable only with the broadcast-matrix
@@ -533,7 +533,7 @@ def emb_ops():
         )
         return semantic_dedup(
             d, id_col="vec_id", vec_col="embedding", centroids=cents,
-            threshold=0.95, cell_cap=3000, vectorized=vectorized,
+            threshold=0.95, cell_cap=3000,
         )
 
     def contrastive_by_cell_study(d):
@@ -575,16 +575,15 @@ def emb_ops():
         )
         return semantic_dedup(
             d, id_col="vec_id", vec_col="embedding", centroids=cents,
-            threshold=0.95, cell_cap=3000,
-            vectorized=True, n_assign=2,
+            threshold=0.95, cell_cap=3000, n_assign=2,
         )
 
     return {
         "semantic-dedup": semdedup,
         "semdedup-ktracked": semdedup_ktracked,
-        "semdedup-ktracked-vec": lambda d: semdedup_ktracked(
-            d, vectorized=True
-        ),
+        # SemDeDup has one cell kernel: the -vec case is the same
+        # call, kept so earlier SCALING.md series stay comparable
+        "semdedup-ktracked-vec": semdedup_ktracked,
         "semdedup-multi-vec": semdedup_multi,
         "contrastive-by-cell": contrastive_by_cell_study,
         "knn-brute-topk": lambda d: pairwise_topk_cosine(
@@ -1156,9 +1155,8 @@ def sf1_tier() -> None:
     core count ($SPARK_GRAFT_CPUS; run once at 8 and once at 32 for
     the parallel-efficiency table). Two runs per entry, the second is
     the headline (the study's steady-state rule). Also verifies the
-    two size gates behave at sf1: fan_out_small must be a NO-OP
-    (plan-estimated documents >> cores x 4 MiB) and the semantic auto
-    kernel must resolve to the streamed HOF form (input > 4 MiB)."""
+    fan_out_small size gate is a NO-OP at sf1 (plan-estimated
+    documents >> cores x 4 MiB)."""
     import __spark_entry__ as m
     from awskinesisconsumer_spark.operators.skew import fan_out_small
 
@@ -1172,12 +1170,6 @@ def sf1_tier() -> None:
     noop = fan_out_small(docs) is docs
     print(f"cores={cores} sf1 documents est={est/2**20:.0f} MiB "
           f"fan_out_small no-op: {noop}", flush=True)
-    from awskinesisconsumer_spark.operators.similarity import (
-        _resolve_vectorized,
-    )
-    emb = spark.read.parquet(f"{SF1_DIR}/embeddings.parquet")
-    print("semantic auto kernel at sf1 (no cell_cap):",
-          _resolve_vectorized(emb, "vec_id", None), flush=True)
     qs = m.queries()
     qs["query-point-lookup"](spark, SF1_DIR).count()  # warm
     only = None

@@ -425,30 +425,33 @@ def test_semantic_dedup_matches_oracle(spark):
         assert min(m["vec_id"] for m in members) == cid
 
 
-def test_semantic_dedup_vectorized_equals_hof(spark):
-    # the Arrow/numpy cell-scoring path must produce the SAME pair
-    # set and therefore bit-identical clusters/keeps as the HOF
-    # expressions (same dim-sequential fold, same HALF_UP rounding)
+def test_semantic_dedup_matches_python_reference(spark):
+    # the numpy cell kernels give the pair set and the clusters/keeps
+    # of a per-pair left fold in Python floats with HALF_UP 6-dp
+    # rounding, over the reference cell assignment
     from awskinesisconsumer_spark.operators.similarity import (
-        ivf_centroids_from_sample, semantic_dedup,
+        ivf_centroids_from_sample, semantic_dedup, semantic_near_dup_pairs,
     )
+    from tests.semdedup_reference import ref_cell_pairs, ref_labels
+    from tests.test_round12_properties import _assign_reference
 
     emb = load_table(spark, "embeddings", SF)
     centroids = ivf_centroids_from_sample(
         emb, id_col="vec_id", vec_col="embedding", n_centroids=8
     )
-    hof = semantic_dedup(
-        emb, id_col="vec_id", vec_col="embedding",
-        centroids=centroids, threshold=0.3,
-    )
-    vec = semantic_dedup(
-        emb, id_col="vec_id", vec_col="embedding",
-        centroids=centroids, threshold=0.3, vectorized=True,
-    )
+    rows = emb.select("vec_id", "embedding").collect()
+    vecs = [list(r["embedding"]) for r in rows]
+    ref = list(zip([r["vec_id"] for r in rows],
+                   _assign_reference(vecs, centroids), vecs))
+    kw = dict(id_col="vec_id", vec_col="embedding", centroids=centroids,
+              threshold=0.3)
     cols = ["vec_id", "cell", "cluster_id", "kept"]
-    assert sorted(map(tuple, hof.select(cols).collect())) == sorted(
-        map(tuple, vec.select(cols).collect())
-    )
+    got = sorted(map(tuple, semantic_dedup(emb, **kw).select(cols)
+                     .collect()))
+    assert got == ref_labels(ref, 0.3)
+    assert any(not r[3] for r in got)
+    assert sorted(map(tuple, semantic_near_dup_pairs(emb, **kw)
+                      .collect())) == ref_cell_pairs(ref, 0.3)
 
 
 def test_semantic_dedup_cell_cap_makes_singletons(spark):

@@ -799,36 +799,48 @@ def test_kmv_merge_estimate_within_tolerance(spark):
 
 
 def test_semantic_dedup_stream_vectorized_freeze_identical(spark, tmp_path):
-    # The vectorized production dial on the stream's FROZEN reps must
-    # leave the flagged output bit-identical (the kernels are pinned
-    # bit-equal to the HOF forms, so the frozen reps — and therefore
-    # every per-row flag — cannot differ).
+    # The stream's FROZEN reps are the kept rows of the pure-Python
+    # reference labelling (per-pair left fold, HALF_UP 6-dp), so the
+    # flagged output equals a batch apply against those reps.
     from awskinesisconsumer_spark.streaming.pipeline import (
         semantic_dedup_stream,
     )
+    from tests.semdedup_reference import ref_labels
+    from tests.test_round12_properties import _assign_reference
 
     emb = load_table(spark, "embeddings", SF)
     cents = ivf_centroids_from_sample(
         emb, id_col="vec_id", vec_col="embedding", n_centroids=8
     )
-    outs = []
-    for i, vec in enumerate((False, True)):
-        src = str(tmp_path / f"src{i}")
-        out = str(tmp_path / f"out{i}")
-        ckpt = str(tmp_path / f"ck{i}")
-        emb.repartition(2).write.parquet(src)
-        q = semantic_dedup_stream(
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src),
-            emb, id_col="vec_id", vec_col="embedding",
-            centroids=cents, threshold=0.3,
-            out_path=out, checkpoint=ckpt, vectorized=vec,
-        )
-        assert q.awaitTermination(300)
-        outs.append(spark.read.parquet(out))
-    a, b = outs
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    emb.repartition(2).write.parquet(src)
+    q = semantic_dedup_stream(
+        spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src),
+        emb, id_col="vec_id", vec_col="embedding",
+        centroids=cents, threshold=0.3,
+        out_path=out, checkpoint=ckpt,
+    )
+    assert q.awaitTermination(300)
+    rows = emb.select("vec_id", "embedding").collect()
+    vecs = [list(r["embedding"]) for r in rows]
+    ref = list(zip([r["vec_id"] for r in rows],
+                   _assign_reference(vecs, cents), vecs))
+    sem = spark.createDataFrame(
+        ref_labels(ref, 0.3),
+        "vec_id bigint, cell int, cluster_id bigint, kept boolean",
+    )
+    assert 0 < sem.where("kept").count() < len(rows)
+    want = semantic_dedup_apply(
+        emb, id_col="vec_id", vec_col="embedding", centroids=cents,
+        reps=semantic_dedup_keep(sem, emb, id_col="vec_id",
+                                 vec_col="embedding"),
+        threshold=0.3,
+    )
+    got = spark.read.parquet(out)
+    assert got.count() == len(rows)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_rank_biased_overlap_hand_computed(spark):

@@ -87,9 +87,10 @@ def test_recall_audit_truth_guard_opt_outs(spark, _emb_cents):
 
 def test_recall_audit_single_mine_in_plan(spark, _emb_cents):
     # With cell_cap=None the audit's candidate leg must hold exactly
-    # ONE pair mine however many levels are audited. The vectorized
-    # mine is an applyInPandas (FlatMapGroupsInPandas in the plan) —
+    # ONE pair mine however many levels are audited. The cell mine
+    # is an applyInPandas (FlatMapGroupsInPandas in the plan) —
     # under the old per-level loop three levels meant three of them.
+    # Its rows are the pure-Python reference audit's.
     from awskinesisconsumer_spark.operators.similarity import (
         semantic_dedup_recall_audit,
     )
@@ -97,13 +98,53 @@ def test_recall_audit_single_mine_in_plan(spark, _emb_cents):
     emb, cents = _emb_cents
     aud = semantic_dedup_recall_audit(
         emb, id_col="vec_id", vec_col="embedding", centroids=cents,
-        threshold=0.3, n_assign_values=(1, 2, 3), vectorized=True,
+        threshold=0.3, n_assign_values=(1, 2, 3),
     )
     # analyzed logical plan: structural and deterministic (the
     # executed plan prints AQE Initial/Final sections, duplicating
     # shared subtrees)
     plan = aud._jdf.queryExecution().analyzed().toString()
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert sorted(map(tuple, aud.collect())) == _reference_audit(
+        emb, cents, 0.3, (1, 2, 3))
+
+
+def _reference_audit(emb, cents, threshold, levels):
+    """`semantic_dedup_recall_audit` in plain Python: the truth pairs
+    are every pair whose reference cosine reaches `threshold`; a pair
+    is caught at level n when some cell is among both vectors' n
+    nearest."""
+    import decimal
+    import math
+    from itertools import combinations
+
+    from tests.semdedup_reference import half_up, ref_cosine
+    from tests.test_similarity import _assign_multi_reference
+
+    rows = sorted((r["vec_id"], list(r["embedding"]))
+                  for r in emb.select("vec_id", "embedding").collect())
+    near = _assign_multi_reference([v for _, v in rows], cents,
+                                   max(levels))
+    rank = [{c: r + 1 for r, c in enumerate(cells)} for cells in near]
+    true, caught = {}, {}
+    for (a, (_, va)), (b, (_, vb)) in combinations(enumerate(rows), 2):
+        cos = ref_cosine(va, vb)
+        if cos is None or cos < threshold:
+            continue
+        lo = math.floor(cos * 10) / 10.0
+        true[lo] = true.get(lo, 0) + 1
+        colev = min((max(rank[a][c], rank[b][c])
+                     for c in rank[a].keys() & rank[b].keys()),
+                    default=None)
+        for n in levels:
+            if colev is not None and colev <= n:
+                caught[n, lo] = caught.get((n, lo), 0) + 1
+    q4 = decimal.Decimal("1e-4")
+    return sorted(
+        (n, lo, t, caught.get((n, lo), 0),
+         half_up(caught.get((n, lo), 0) / t, q4))
+        for n in levels for lo, t in true.items()
+    )
 
 
 def test_recall_audit_multi_level_equals_per_level(spark, _emb_cents):

@@ -1,66 +1,9 @@
-"""Round-17 (optimization round 2) focused tests: the r16-ADVICE
-memory-safety gate on the semantic-dedup auto kernel, the
-duplicate-id parity fix in the numpy cell-pair kernel, and the
-fan_out_small env-parse hardening."""
-
-import os
+"""Round-17 (optimization round 2) focused tests: the duplicate-id
+parity fix in the numpy cell-pair kernel and the fan_out_small
+env-parse hardening."""
 
 import pytest
 from pyspark.sql import functions as F
-
-SF_SMOKE = "/root/testdata/sf0.01"
-
-
-# ---------------------------------------------------------------------------
-# _resolve_vectorized: auto must be memory-safe (r16 ADVICE, medium)
-# ---------------------------------------------------------------------------
-
-
-def _base(spark):
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    return emb.select(
-        F.col("vec_id"), (F.col("vec_id") % 4).alias("cell"),
-        F.col("embedding"),
-    )
-
-
-def test_auto_kernel_requires_bounded_memory_regime(spark, monkeypatch):
-    from awskinesisconsumer_spark.operators import similarity
-    from awskinesisconsumer_spark.operators.similarity import (
-        _resolve_vectorized,
-    )
-
-    base = _base(spark)
-    # small sized input, LongType ids -> kernel
-    assert _resolve_vectorized(base, "vec_id", None) is True
-    # cell_cap set -> kernel regardless of size (the documented
-    # enforcement: no task sees more than cell_cap rows)
-    assert _resolve_vectorized(base, "vec_id", None, 64) is True
-    # the size gate refuses when the input is "too big to prove the
-    # one-task-per-cell regime safe" (simulated via the constant)
-    monkeypatch.setattr(similarity, "_AUTO_KERNEL_BYTES", 1)
-    assert _resolve_vectorized(base, "vec_id", None) is False
-    # ... but cell_cap still opts in, while its cell_cap^2 x 8-byte
-    # matrix fits the 512 MiB the default size gate admits
-    assert _resolve_vectorized(base, "vec_id", None, 64) is True
-    assert _resolve_vectorized(base, "vec_id", None, 8192) is True
-    assert _resolve_vectorized(base, "vec_id", None, 8193) is False
-    # explicit force always wins
-    assert _resolve_vectorized(base, "vec_id", True) is True
-    assert _resolve_vectorized(base, "vec_id", False, 64) is False
-    # non-long ids never take the kernel (it emits BIGINT ids)
-    sbase = base.withColumn("vec_id", F.col("vec_id").cast("string"))
-    assert _resolve_vectorized(sbase, "vec_id", None, 64) is False
-
-
-def test_auto_kernel_gate_entries_still_take_kernel(spark):
-    # the bench/gate semantic entries rely on auto -> kernel at gate
-    # SFs; the safety gate must not flip them (input ~200 KB << 4 MiB)
-    from awskinesisconsumer_spark.operators.similarity import (
-        _resolve_vectorized,
-    )
-
-    assert _resolve_vectorized(_base(spark), "vec_id", None) is True
 
 
 # ---------------------------------------------------------------------------
@@ -68,13 +11,14 @@ def test_auto_kernel_gate_entries_still_take_kernel(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_cell_pairs_duplicate_ids_match_hof(spark):
+def test_cell_pairs_duplicate_ids_match_python_reference(spark):
     # a duplicated id inside a cell must not emit id_a == id_b
-    # self-pairs on the kernel path (the HOF path's id_a < id_b
-    # filter excludes them); both paths must agree row-for-row
+    # self-pairs; each of its rows pairs with the other ids, as in
+    # the reference, row for row
     from awskinesisconsumer_spark.operators.similarity import (
         _cell_pairs,
     )
+    from tests.semdedup_reference import ref_cell_pairs
 
     rows = [
         (1, 0, [1.0, 0.0]), (1, 0, [1.0, 0.0]),  # duplicate id 1
@@ -85,11 +29,8 @@ def test_cell_pairs_duplicate_ids_match_hof(spark):
         rows, "vec_id long, cell int, embedding array<double>")
     kw = dict(id_col="vec_id", vec_col="embedding", threshold=0.9,
               cell_cap=None, caller="t")
-    vec = sorted(tuple(r) for r in _cell_pairs(
-        base, vectorized=True, **kw).collect())
-    hof = sorted(tuple(r) for r in _cell_pairs(
-        base, vectorized=False, **kw).collect())
-    assert vec == hof
+    vec = sorted(tuple(r) for r in _cell_pairs(base, **kw).collect())
+    assert vec == ref_cell_pairs(rows, 0.9) == [(1, 2), (1, 2), (4, 5)]
     assert all(a < b for a, b in vec)  # no self-pairs, ordered
 
 

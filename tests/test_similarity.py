@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import math
+from typing import Iterator
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +26,7 @@ from awskinesisconsumer_spark.operators.similarity import (
     semantic_dedup_prepare_reps,
 )
 from tests.conftest import SF_SMOKE
+from tests.semdedup_reference import ref_cell_pairs, ref_labels
 from tests.test_round12_properties import _assign_reference
 
 
@@ -165,7 +168,7 @@ def test_ivf_assign_row_blocks_do_not_change_cells(spark, monkeypatch,
     df = spark.createDataFrame(
         _DEGENERATE, "id long, v array<double>").coalesce(1)
     single, pair = _single(df), _pair(df)
-    monkeypatch.setattr(similarity, "_ASSIGN_BLOCK_CELLS",
+    monkeypatch.setattr(similarity, "_BLOCK_CELLS",
                         block_rows * len(_DEGENERATE_CENTS))
     assert _single(df) == single
     assert _pair(df) == pair
@@ -277,7 +280,7 @@ def _pair_table_labels(df, *, centroids, threshold, cell_cap):
     )
     pairs = similarity._semantic_pairs(
         base, members, id_col="id", vec_col="v", threshold=threshold,
-        cell_cap=cell_cap, vectorized=True, n_assign=1, caller="oracle",
+        cell_cap=cell_cap, n_assign=1, caller="oracle",
     )
     cc = connected_components(pairs, vertices=df.select("id"))
     return (
@@ -285,6 +288,18 @@ def _pair_table_labels(df, *, centroids, threshold, cell_cap):
         .withColumn("kept", F.col("id") == F.col("cluster_id"))
         .select("id", "cell", "cluster_id", "kept")
     )
+
+
+def _with_cells(rows, cents):
+    """(id, vec) rows as the reference's (id, cell, vec): the
+    `ivf_assign` cell, with degenerate vectors (NULL, a NULL element,
+    or a length other than the centroids') in cell 0."""
+    def cell(v):
+        if v is None or len(v) != len(cents[0]) or None in v:
+            return 0
+        return _assign_reference([v], cents)[0]
+
+    return [(i, cell(v), v) for i, v in rows]
 
 
 def _labels_fixture(seed):
@@ -319,12 +334,14 @@ def test_cell_labels_match_pair_table_components(spark, threshold,
     assert len(rows) < k or k == 4  # k = 64 leaves most cells empty
     got = sorted(map(tuple, semantic_dedup(
         df, id_col="id", vec_col="v", centroids=cents[:k],
-        threshold=threshold, cell_cap=cell_cap, vectorized=True,
+        threshold=threshold, cell_cap=cell_cap,
     ).collect()))
     want = sorted(map(tuple, _pair_table_labels(
         df, centroids=cents[:k], threshold=threshold, cell_cap=cell_cap,
     ).collect()))
     assert got == want
+    assert got == ref_labels(_with_cells(rows, cents[:k]), threshold,
+                             cell_cap)
     assert len(got) == len(rows)
     assert any(not r[3] for r in got)  # near-dups merged
     sizes = {}
@@ -356,7 +373,13 @@ def test_min_labels_match_union_find_reference():
                 ra, rb = find(a), find(b)
                 parent[max(ra, rb)] = min(ra, rb)
             want = [find(x) for x in range(n)]
-            assert similarity._min_labels(n, u, v).tolist() == want
+            assert similarity._min_labels(
+                np.arange(n), u, v).tolist() == want
+            # folded in batches of edges, as the cell labeller does
+            lab = np.arange(n)
+            for s in range(0, n_edges, 3):
+                lab = similarity._min_labels(lab, u[s:s + 3], v[s:s + 3])
+            assert lab.tolist() == want
 
 
 def test_semantic_dedup_kernel_issues_at_most_three_jobs(spark, emb_cents):
@@ -369,7 +392,7 @@ def test_semantic_dedup_kernel_issues_at_most_three_jobs(spark, emb_cents):
     try:
         rows = semantic_dedup(
             emb, id_col="vec_id", vec_col="embedding", centroids=cents,
-            threshold=0.95, vectorized=True,
+            threshold=0.95,
         ).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -378,29 +401,21 @@ def test_semantic_dedup_kernel_issues_at_most_three_jobs(spark, emb_cents):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
-def test_semantic_dedup_kernel_scores_ragged_vectors_like_hof(spark):
-    # a 2-dim row among 3-dim ones (and a NULL element) is unscorable
-    # on the HOF path; the kernel must label it, not fail the job
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.01]), (3, [1.0, 0.0]),
-         (4, [1.0, None, 0.0]), (5, [0.0, 1.0, 0.0])],
-        "id bigint, v array<double>",
-    )
+def test_semantic_dedup_kernel_scores_ragged_vectors_like_reference(spark):
+    # a 2-dim row among 3-dim ones (and a NULL element) has no score;
+    # the kernel must label it, not fail the job
+    rows = [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.01]), (3, [1.0, 0.0]),
+            (4, [1.0, None, 0.0]), (5, [0.0, 1.0, 0.0])]
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
     kw = dict(id_col="id", vec_col="v", centroids=[[1.0, 0.0, 0.0]],
               threshold=0.95)
-    hof, kernel = (
-        sorted(map(tuple, semantic_dedup(df, vectorized=vec, **kw)
-                   .collect()))
-        for vec in (False, True)
-    )
-    assert kernel == hof
+    ref = [(i, 0, v) for i, v in rows]
+    kernel = sorted(map(tuple, semantic_dedup(df, **kw).collect()))
+    assert kernel == ref_labels(ref, 0.95)
     assert (3, 0, 3, True) in kernel and (2, 0, 1, False) in kernel
-    pairs = {
-        vec: sorted(map(tuple, similarity.semantic_near_dup_pairs(
-            df, vectorized=vec, **kw).collect()))
-        for vec in (False, True)
-    }
-    assert pairs[True] == pairs[False] == [(1, 2)]
+    pairs = sorted(map(tuple, similarity.semantic_near_dup_pairs(
+        df, **kw).collect()))
+    assert pairs == ref_cell_pairs(ref, 0.95) == [(1, 2)]
 
 
 def test_cell_labels_keep_capped_cells_out_of_the_group(spark, tmp_path,
@@ -430,7 +445,7 @@ def test_cell_labels_keep_capped_cells_out_of_the_group(spark, tmp_path,
     cents = [[1.0, 0.0], [0.0, 1.0]]
     got = sorted(map(tuple, semantic_dedup(
         df, id_col="id", vec_col="v", centroids=cents, threshold=0.95,
-        cell_cap=4, vectorized=True,
+        cell_cap=4,
     ).collect()))
     sizes = [int(n) for n in open(seen).read().split()]
     assert sizes and max(sizes) <= 4 and sum(sizes) == 3
@@ -447,19 +462,17 @@ def test_semantic_dedup_kernel_keeps_ids_above_2_53_beside_a_null_id(spark):
     # a NULL id in the cell must not turn the id column into float64,
     # which would round 2^53 + 1 and 2^53 + 3 to other ids
     big = 2**53 + 1
-    df = spark.createDataFrame(
-        [(None, [1.0, 0.0]), (big, [1.0, 0.001]), (big + 2, [1.0, 0.002]),
-         (5, [0.0, 1.0])],
-        "id bigint, v array<double>",
-    )
-    kw = dict(id_col="id", vec_col="v", centroids=[[1.0, 0.0], [0.0, 1.0]],
-              threshold=0.95)
-    for vec in (False, True):
-        assert sorted(map(tuple, semantic_dedup(
-            df, vectorized=vec, **kw).collect())) == [
-            (5, 1, 5, True), (big, 0, big, True), (big + 2, 0, big, False)]
-        assert [tuple(r) for r in similarity.semantic_near_dup_pairs(
-            df, vectorized=vec, **kw).collect()] == [(big, big + 2)]
+    rows = [(None, [1.0, 0.0]), (big, [1.0, 0.001]), (big + 2, [1.0, 0.002]),
+            (5, [0.0, 1.0])]
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    kw = dict(id_col="id", vec_col="v", centroids=cents, threshold=0.95)
+    ref = _with_cells(rows, cents)
+    assert sorted(map(tuple, semantic_dedup(df, **kw).collect())) == [
+        (5, 1, 5, True), (big, 0, big, True), (big + 2, 0, big, False)
+    ] == ref_labels(ref, 0.95)
+    assert [tuple(r) for r in similarity.semantic_near_dup_pairs(
+        df, **kw).collect()] == [(big, big + 2)] == ref_cell_pairs(ref, 0.95)
 
 
 def test_semantic_dedup_id_in_two_cells_splits_on_the_kernel_path(spark):
@@ -467,19 +480,101 @@ def test_semantic_dedup_id_in_two_cells_splits_on_the_kernel_path(spark):
     # cells. The pair table resolves components globally and merges
     # both cells through id 2; the n_assign=1 kernel resolves each
     # cell on its own. Pinned so the difference stays documented.
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (2, [0.01, 1.0]),
-         (3, [0.0, 1.0])],
-        "id bigint, v array<double>",
-    )
-    kw = dict(id_col="id", vec_col="v", centroids=[[1.0, 0.0], [0.0, 1.0]],
+    rows = [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (2, [0.01, 1.0]),
+            (3, [0.0, 1.0])]
+    df = spark.createDataFrame(rows, "id bigint, v array<double>")
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    kw = dict(id_col="id", vec_col="v", centroids=cents, threshold=0.95)
+    kernel = sorted(map(tuple, semantic_dedup(df, **kw).collect()))
+    assert kernel == [(1, 0, 1, True), (2, 0, 1, False),
+                      (2, 1, 2, True), (3, 1, 2, False)]
+    assert kernel == ref_labels(_with_cells(rows, cents), 0.95)
+    assert sorted(map(tuple, _pair_table_labels(
+        df, centroids=cents, threshold=0.95, cell_cap=None).collect())) == [
+        (1, 0, 1, True), (2, 0, 1, False), (2, 1, 1, False),
+        (3, 1, 1, False)]
+
+
+@pytest.mark.parametrize("id_type", ["string", "int"])
+def test_semantic_dedup_keeps_the_id_type(spark, id_type):
+    # string and int ids come back with their own type, in the rows
+    # the reference gives (string ids order as strings: "10" < "9")
+    rows = [(10, [1.0, 0.0]), (9, [1.0, 0.001]), (11, [0.0, 1.0]),
+            (12, [0.01, 1.0]), (13, [-1.0, 1.0]), (None, [1.0, 0.0])]
+    conv = str if id_type == "string" else int
+    rows = [(None if i is None else conv(i), v) for i, v in rows]
+    df = spark.createDataFrame(rows, f"id {id_type}, v array<double>")
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    kw = dict(id_col="id", vec_col="v", centroids=cents, threshold=0.95)
+    ref = _with_cells(rows, cents)
+    labels = semantic_dedup(df, **kw)
+    pairs = similarity.semantic_near_dup_pairs(df, **kw)
+    id_t = df.schema["id"].dataType
+    assert labels.schema["id"].dataType == id_t
+    assert labels.schema["cluster_id"].dataType == id_t
+    assert [pairs.schema[c].dataType for c in ("id_a", "id_b")] == [id_t] * 2
+    assert sorted(map(tuple, labels.collect())) == ref_labels(ref, 0.95)
+    assert sorted(map(tuple, pairs.collect())) == ref_cell_pairs(ref, 0.95)
+    assert ref_cell_pairs(ref, 0.95) == (
+        [("10", "9"), ("11", "12")] if id_type == "string"
+        else [(9, 10), (11, 12)])
+
+
+def test_cell_kernels_score_a_large_cell_in_bounded_blocks(spark, tmp_path,
+                                                           monkeypatch):
+    # a 600-row constant-vector cell with no cell_cap: with
+    # _BLOCK_CELLS at 4800, the kernels score it in 8-row blocks and
+    # no score matrix exceeds 4800 cells. `_np_fold_cosines` is
+    # spied on inside the Python worker, where the kernels run.
+    from pyspark.sql.group import GroupedData
+
+    budget, n = 4800, 600
+    monkeypatch.setattr(similarity, "_BLOCK_CELLS", budget)
+    log = str(tmp_path / "shapes")
+    apply = GroupedData.applyInPandas
+
+    def spy_apply(self, func, schema):
+        streams = "Iterator" in str(func.__annotations__.get("return"))
+
+        def spy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from awskinesisconsumer_spark.operators import similarity as s
+
+            fold = s._np_fold_cosines
+
+            def fold_spy(cv, bm):
+                with open(log, "a") as f:
+                    f.write(f"{cv.shape[0]} {bm.shape[0]}\n")
+                return fold(cv, bm)
+
+            s._np_fold_cosines = fold_spy
+            try:
+                if streams:
+                    yield from func(batches)
+                else:
+                    yield func(pd.concat(batches, ignore_index=True))
+            finally:
+                s._np_fold_cosines = fold
+
+        return apply(self, spy, schema)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy_apply)
+    ids = list(range(1000, 1000 + n))
+    ids.reverse()
+    df = spark.createDataFrame([(i, [1.0, 2.0, 3.0, 4.0]) for i in ids],
+                               "id bigint, v array<double>")
+    kw = dict(id_col="id", vec_col="v", centroids=[[1.0, 1.0, 1.0, 1.0]],
               threshold=0.95)
-    got = {
-        vec: sorted(map(tuple, semantic_dedup(df, vectorized=vec, **kw)
-                        .collect()))
-        for vec in (False, True)
-    }
-    assert got[False] == [(1, 0, 1, True), (2, 0, 1, False),
-                          (2, 1, 1, False), (3, 1, 1, False)]
-    assert got[True] == [(1, 0, 1, True), (2, 0, 1, False),
-                         (2, 1, 2, True), (3, 1, 2, False)]
+    labels = semantic_dedup(df, **kw).collect()
+    assert len(labels) == n
+    assert {(r["cell"], r["cluster_id"]) for r in labels} == {(0, 1000)}
+    assert [r["id"] for r in labels if r["kept"]] == [1000]
+    agg = similarity.semantic_near_dup_pairs(df, **kw).agg(
+        F.count(F.lit(1)), F.countDistinct("id_a", "id_b"),
+        F.sum((F.col("id_a") < F.col("id_b")).cast("int")),
+    ).first()
+    assert tuple(agg) == (n * (n - 1) // 2,) * 3 == (179_700,) * 3
+    shapes = [tuple(map(int, ln.split())) for ln in open(log)]
+    # 75 blocks per kernel, each at most 8 x 600
+    assert len(shapes) == 2 * 75
+    assert all(r * c <= budget for r, c in shapes)
+    assert max(r for r, _ in shapes) == budget // n
